@@ -27,27 +27,19 @@ import org.apache.spark.sql.functions._
   * [[components]] answers from forest ∪ pending (one star-algorithm
   * run over forest rows + pending backlog — exact at every point);
   * [[compactStore]] folds pending into a fresh one-shard forest so
-  * reads stop paying the backlog. Same read-your-writes contract as
-  * [[MinhashStore]]: appends are visible immediately, compaction is a
-  * maintenance-window rewrite.
+  * reads stop paying the backlog. Appends are visible immediately;
+  * compaction follows the [[StoreKernel]] store contract.
   */
 object CcStore {
 
-  private def hasDir(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** Build the store from an initial edge set (overwrites `path`). */
   def write(edges: DataFrame, path: String): Unit = {
-    val spark = edges.sparkSession
     val labels = Dedup.canonicalizeCc(
       edges.select(col("id_a").cast("long").as("id_a"),
         col("id_b").cast("long").as("id_b")))
     labels.write.mode("overwrite").parquet(s"$path/forest")
     graft.plans.Blocks.free(labels)
-    val fs = new org.apache.hadoop.fs.Path(s"$path/pending")
-    fs.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(fs, true)
+    StoreKernel.dropComponent(edges.sparkSession, path, "pending")
   }
 
   /** Append an edge batch: a batch-scale parquet write, no global
@@ -67,10 +59,8 @@ object CcStore {
   def components(spark: SparkSession, path: String): DataFrame = {
     val forest = spark.read.parquet(s"$path/forest")
       .select(col("id").as("id_a"), col("rep").as("id_b"))
-    val all =
-      if (hasDir(spark, s"$path/pending"))
-        forest.unionByName(spark.read.parquet(s"$path/pending"))
-      else forest
+    val all = StoreKernel.parquetIfExists(spark, s"$path/pending")
+      .fold(forest)(forest.unionByName(_))
     // star rows include rep self-rows only implicitly (rep appears as
     // id_b); canonicalizeCc emits every endpoint, so reps re-surface.
     // Roots of singleton-free components are fine; ids that were only
@@ -107,20 +97,11 @@ object CcStore {
   /** Fold the pending backlog into a fresh one-shard forest snapshot
     * and clear it. Returns a manifest (component, rows). */
   def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val folded = components(spark, path)
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    folded.coalesce(1).write.parquet(s"$tmp/forest")
+    StoreKernel.swapComponents(spark, path, Seq("forest"))(tmp =>
+      folded.coalesce(1).write.parquet(s"$tmp/forest"))
     graft.plans.Blocks.free(folded)
-    fs.delete(new Path(s"$path/forest"), true)
-    fs.rename(new Path(s"$tmp/forest"), new Path(s"$path/forest"))
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(s"$path/pending"), true)
-    import spark.implicits._
-    Seq(("forest", spark.read.parquet(s"$path/forest").count()),
-        ("pending", 0L))
-      .toDF("component", "rows")
+    StoreKernel.dropComponent(spark, path, "pending")
+    StoreKernel.manifest(spark, path, Seq("forest"), Seq(("pending", 0L)))
   }
 }

@@ -58,18 +58,10 @@ object CmsStore {
 
   /** Rewrite the shard backlog as one merged shard (estimates
     * unchanged — addition is associative). Returns (component, rows)
-    * like the other stores. */
+    * like the other stores; swap contract in [[StoreKernel]]. */
   def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    cells(spark, path).write.parquet(s"$tmp/cells")
-    fs.delete(new Path(s"$path/cells"), true)
-    fs.rename(new Path(s"$tmp/cells"), new Path(s"$path/cells"))
-    fs.delete(new Path(tmp), true)
-    import spark.implicits._
-    Seq(("cells", spark.read.parquet(s"$path/cells").count()))
-      .toDF("component", "rows")
+    StoreKernel.swapComponents(spark, path, Seq("cells"))(tmp =>
+      cells(spark, path).write.parquet(s"$tmp/cells"))
+    StoreKernel.manifest(spark, path, Seq("cells"))
   }
 }

@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   *   - `cells/`     (id, vec) partitioned by cell — probes read only
   *                  the probed cells' directories.
   *
-  * Maintenance lifecycle (MinhashStore parity): [[delete]] tombstones
-  * ids (probes stop reporting them immediately), [[compactStore]]
-  * reclaims their bytes, and [[drift]] measures centroid staleness —
+  * Maintenance lifecycle: the IVF store's own ([[delete]],
+  * [[compactStore]] and [[maintainStore]] are
+  * [[Knn.deleteFromIvfIndex]], [[Knn.compactIvfStore]] and
+  * [[Knn.maintainIvfStore]]; contract in [[StoreKernel]]), plus
+  * [[drift]], which measures centroid staleness —
   * appends assign against frozen centroids, so rising drift is the
   * signal to schedule the periodic full rebuild ([[write]] on the
   * accumulated corpus), the standard IVF maintenance trade.
@@ -42,96 +44,58 @@ object EmbeddingStore {
     * (id_new, id_store, sim >= tau). k=1 suffices for detection — the
     * TOP neighbor beats every other, so "best >= tau" is exactly
     * "any >= tau". The probe reads ~nprobe/c of the store
-    * (partition-pruned; plan-asserted in Knn's specs). Tombstoned ids
-    * are filtered out of the cells scan BEFORE top-k ranking (see
-    * [[Knn.searchIvf]]'s `exclude` note — post-ranking masking would
-    * let a deleted doc eat the one rank slot and hide a live dup). */
+    * (partition-pruned; plan-asserted in Knn's specs). The probe
+    * applies the store's own tombstones ([[delete]]), filtering them
+    * out of the cells scan BEFORE top-k ranking — post-ranking masking
+    * would let a deleted doc eat the one rank slot and hide a live
+    * dup. */
   def probe(spark: SparkSession, path: String,
             batch: DataFrame, idCol: String, vecCol: String,
             tau: Double = 0.95, nprobe: Int = 4): DataFrame =
-    Knn.searchIvf(spark, path, batch, idCol, vecCol, k = 1, nprobe,
-      exclude = tombstonesOpt(spark, path))
+    Knn.searchIvf(spark, path, batch, idCol, vecCol, k = 1, nprobe)
       .where(col("sim") >= tau)
       .select(col("query_id").as("id_new"),
         col("neighbor_id").as("id_store"), col("sim"))
 
   /** Tombstone `ids` (one column, same type as the store's id): probes
     * stop reporting them immediately; bytes are reclaimed at the next
-    * [[compactStore]]. Append-only metadata — no store rewrite — so it
-    * is safe per-batch (takedowns, retraction feeds). The tombstone
-    * set must stay broadcast-scale between compactions (it rides into
-    * every probe's cells scan as a broadcast anti-join). Same contract
-    * as [[MinhashStore.delete]]. */
+    * [[compactStore]]. The store's own delete is
+    * [[Knn.deleteFromIvfIndex]] — same layout, same tombstones. */
   def delete(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+    Knn.deleteFromIvfIndex(ids, idCol, path)
 
-  private def tombstonesOpt(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).select("id").distinct())
-    else None
-  }
-
-  /** Threshold-driven store maintenance (round 15 —
-    * [[graft.operators.Knn.maintainIvfStore]]'s embedding-store twin,
-    * completing the policy matrix beside [[drift]]): compact when the
-    * distinct tombstone-table count (orphans included) exceeds
-    * `maxTombstoneFrac` of stored vectors, or when any cell directory
-    * has accreted more than `maxFilesPerCell` files (each
-    * [[ingest]]/[[ingestStream]] batch appends ≥1 file per touched
-    * cell; 0 disables). Compaction answers bytes/file hygiene only —
-    * distribution shift stays [[drift]]'s metric and a full rebuild's
-    * job. Returns Some(manifest) when maintenance ran. */
+  /** Threshold-driven store maintenance: [[Knn.maintainIvfStore]]
+    * (compact past `maxTombstoneFrac` of stored vectors, orphan
+    * tombstones included, or when a cell directory holds more than
+    * `maxFilesPerCell` files; 0 disables). Distribution shift stays
+    * [[drift]]'s metric and a full rebuild's job. Returns
+    * Some([[compactStore]]-shaped manifest) when maintenance ran. */
   def maintainStore(spark: SparkSession, path: String,
                     maxTombstoneFrac: Double = 0.1,
-                    maxFilesPerCell: Int = 0): Option[DataFrame] = {
-    require(maxTombstoneFrac >= 0.0,
-      s"need maxTombstoneFrac >= 0, got $maxTombstoneFrac")
-    val rows = spark.read.parquet(s"$path/cells").select("id").count()
-    val nTomb = tombstonesOpt(spark, path).map(_.count()).getOrElse(0L)
-    val filesOver = maxFilesPerCell > 0 &&
-      !Knn.storeFileStats(spark, path, "cells")
-        .where(col("n_files") > maxFilesPerCell).isEmpty
-    if ((rows > 0 && nTomb.toDouble / rows > maxTombstoneFrac) ||
-        filesOver)
-      Some(compactStore(spark, path))
-    else None
-  }
+                    maxFilesPerCell: Int = 0): Option[DataFrame] =
+    Knn.maintainIvfCells(spark, path, maxTombstoneFrac, maxFilesPerCell)
+      .map(cellsManifest(spark, path, _))
 
-  /** Rewrite `cells/` minus tombstones (cell partitioning preserved —
-    * probe pruning is untouched) and drop the tombstone set. Centroids
-    * are NOT retrained: compaction reclaims bytes, it does not answer
-    * distribution shift — that is [[drift]]'s job, and the answer is a
-    * full [[write]] rebuild. Run in a maintenance window (the
-    * directory swap is not atomic w.r.t. concurrent probes). Returns a
-    * manifest: (component, rows). AQE sizes the anti-join — a
-    * compaction may carry an arbitrarily large tombstone backlog, so
-    * no broadcast hint here (same posture as
-    * [[MinhashStore.compactStore]]). */
-  def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tomb = tombstonesOpt(spark, path)
-    val nTomb = tomb.map(_.count()).getOrElse(0L)
-    val cells = spark.read.parquet(s"$path/cells")
-    val kept = tomb.fold(cells)(t =>
-      cells.join(t, cells("id") === t("id"), "left_anti"))
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    // one shuffle partition per cell → one file per cell: compaction
-    // COALESCES the ≥1-file-per-touched-cell-per-batch accretion of
-    // the append/ingest paths (round 15 — [[maintainStore]]'s
-    // files-per-cell trigger relies on this resetting the count)
-    kept.repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$tmp/cells")
-    fs.delete(new Path(s"$path/cells"), true)
-    fs.rename(new Path(s"$tmp/cells"), new Path(s"$path/cells"))
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(s"$path/tombstones"), true)
+  /** Reclaim tombstoned vectors: [[Knn.compactIvfStore]] rewrites only
+    * the cells holding a tombstoned id (cell partitioning — and so
+    * probe pruning — preserved) and drops the tombstone set; untouched
+    * cells keep their files (coalescing them is [[maintainStore]]'s
+    * `maxFilesPerCell` trigger). Centroids are NOT retrained: that is
+    * [[drift]]'s question and a full [[write]] rebuild's answer.
+    * Returns a manifest (component, rows):
+    * the store's `cells` row count and `tombstones_applied`. */
+  def compactStore(spark: SparkSession, path: String): DataFrame =
+    cellsManifest(spark, path, new Knn.IvfCompaction(spark, path).run(Nil))
+
+  /** (component, rows) from an IVF compaction's result: the store's
+    * `cells` rows — the compaction's live count when it has one, else
+    * re-counted — and the applied tombstones. */
+  private def cellsManifest(spark: SparkSession, path: String,
+                            ivf: (Seq[(String, Long)], Option[Long])): DataFrame = {
     import spark.implicits._
-    Seq(("cells", spark.read.parquet(s"$path/cells").count()),
-        ("tombstones_applied", nTomb))
+    val (rows, live) = ivf
+    Seq(("cells", live.getOrElse(spark.read.parquet(s"$path/cells").count())),
+      ("tombstones_applied", rows.toMap.apply("tombstones_applied")))
       .toDF("component", "rows")
   }
 
@@ -154,7 +118,7 @@ object EmbeddingStore {
       spark.read.parquet(s"$path/centroids")
         .select(col("cell"), col("cvec")))
     val cells = spark.read.parquet(s"$path/cells")
-    val live = tombstonesOpt(spark, path).fold(cells)(t =>
+    val live = StoreKernel.tombstones(spark, path).fold(cells)(t =>
       cells.join(broadcast(t), cells("id") === t("id"), "left_anti"))
     val microDist = round(
       (lit(1.0) - graft.functions.Vectors.cosine(col("vec"), col("cvec"))) * 1e6)

@@ -57,18 +57,10 @@ object HllStore {
   /** Rewrite the shard backlog as ONE merged shard (estimates are
     * unchanged — merge is associative/idempotent; this just bounds
     * the register-row count at |keys|·2^p again). Returns
-    * (component, rows) like MinhashStore.compactStore. */
+    * (component, rows); swap contract in [[StoreKernel]]. */
   def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    registers(spark, path).write.parquet(s"$tmp/registers")
-    fs.delete(new Path(s"$path/registers"), true)
-    fs.rename(new Path(s"$tmp/registers"), new Path(s"$path/registers"))
-    fs.delete(new Path(tmp), true)
-    import spark.implicits._
-    Seq(("registers", spark.read.parquet(s"$path/registers").count()))
-      .toDF("component", "rows")
+    StoreKernel.swapComponents(spark, path, Seq("registers"))(tmp =>
+      registers(spark, path).write.parquet(s"$tmp/registers"))
+    StoreKernel.manifest(spark, path, Seq("registers"))
   }
 }

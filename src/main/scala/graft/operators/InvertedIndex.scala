@@ -49,7 +49,7 @@ object InvertedIndex {
       .agg(count(lit(1)).as("tf"))
     val dfreq = postings.groupBy("term").agg(count(lit(1)).as("df"))
     // postings and _stats are independent writes — overlap (guide §2.6)
-    graft.operators.Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => postings.join(dfreq, Seq("term"))
         .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
         .repartition(col("bucket"))
@@ -83,7 +83,7 @@ object InvertedIndex {
     require(buckets >= 1, "buckets must be >= 1")
     import df.sparkSession.implicits._
     // trigram postings and _stats are independent writes — overlap
-    graft.operators.Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => df.select(col(idCol).as("doc_id"),
           explode(array_distinct(charTrigrams(textCol))).as("tri"))
         .withColumn("bucket", pmod(xxhash64(col("tri")), lit(buckets.toLong)))
@@ -165,7 +165,7 @@ object InvertedIndex {
     // (round 16, guide §2.6: the same discipline write/writeTrigram
     // already apply; the tiny _stats commit hides under the postings
     // shuffle's tail)
-    graft.operators.Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => df.select(col(idCol).as("doc_id"),
           posexplode(toks(textCol)).as(Seq("pos", "term")))
         .groupBy("doc_id", "term")

@@ -599,17 +599,15 @@ object Knn {
     * driver-bounded) becomes an `isin` filter on the partition column,
     * so the scan prunes to the probed directories before any join.
     *
-    * `exclude`: optional one-column `id` frame of corpus ids to drop
-    * from the scan BEFORE scoring (broadcast anti-join — must stay
-    * broadcast-scale). Filtering pre-top-k is load-bearing: an excluded
-    * id that merely got masked post-ranking would eat a rank slot and
-    * hide a live neighbor (EmbeddingStore tombstones ride here). */
+    * The store's own tombstones ([[deleteFromIvfIndex]]) are dropped
+    * from the scan BEFORE scoring (broadcast anti-join). Filtering
+    * pre-top-k is load-bearing: a deleted id that merely got masked
+    * post-ranking would eat a rank slot and hide a live neighbor. */
   def searchIvf(spark: SparkSession, path: String,
                 queries: DataFrame, queryId: String, queryVec: String,
-                k: Int, nprobe: Int = 4,
-                exclude: Option[DataFrame] = None): DataFrame =
+                k: Int, nprobe: Int = 4): DataFrame =
     topKPerQuery(probeIvf(spark, path, queries, queryId, queryVec,
-      nprobe, None, exclude), k)
+      nprobe, None), k)
 
   /** FILTERED vector search over a persisted IVF index (round 13) —
     * the metadata-predicate + kNN combination every production vector
@@ -626,10 +624,9 @@ object Knn {
   def searchIvfFiltered(spark: SparkSession, path: String,
                         queries: DataFrame, queryId: String,
                         queryVec: String, k: Int, pred: Column,
-                        nprobe: Int = 4,
-                        exclude: Option[DataFrame] = None): DataFrame =
+                        nprobe: Int = 4): DataFrame =
     topKPerQuery(probeIvf(spark, path, queries, queryId, queryVec,
-      nprobe, Some(pred), exclude), k)
+      nprobe, Some(pred)), k)
 
   /** RANGE search over a persisted IVF index (round 13) — every
     * neighbor with 6-dp cosine ≥ `tau` among the probed cells, no
@@ -642,10 +639,8 @@ object Knn {
   def searchIvfRange(spark: SparkSession, path: String,
                      queries: DataFrame, queryId: String,
                      queryVec: String, tau: Double, nprobe: Int = 4,
-                     pred: Option[Column] = None,
-                     exclude: Option[DataFrame] = None): DataFrame =
-    probeIvf(spark, path, queries, queryId, queryVec, nprobe, pred,
-      exclude)
+                     pred: Option[Column] = None): DataFrame =
+    probeIvf(spark, path, queries, queryId, queryVec, nprobe, pred)
       .where(col("sim") >= tau)
 
   /** TOMBSTONE delete for a persisted IVF index (round 14 — the
@@ -658,29 +653,11 @@ object Knn {
     * [[Pq.searchIvfPq]]/[[Pq.searchIvfRq]]/[[Pq.searchIvfSq8]] (all
     * store under the same layout) — drops tombstoned ids from the
     * pruned cell scan BEFORE scoring, so a deleted id can never eat a
-    * rank slot or an ADC shortlist slot (the EmbeddingStore pre-top-k
-    * discipline). Append-only metadata, no store rewrite — safe
-    * per-batch (takedowns, retraction feeds); the tombstone set must
-    * stay broadcast-scale between compactions (it rides into every
-    * probe as a broadcast anti-join), the same bound as every
-    * tombstone store in the repo. Bytes reclaim at
-    * [[compactIvfStore]]. */
+    * rank slot or an ADC shortlist slot. Tombstone contract in
+    * [[StoreKernel]]; bytes reclaim at [[compactIvfStore]]. */
   def deleteFromIvfIndex(ids: DataFrame, idCol: String,
                          path: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-
-  /** The tombstone table if one exists (pre-r14 stores have none —
-    * probing or compacting one is the no-tombstone fast path, not an
-    * error). Distinct: delete batches may overlap. */
-  private[operators] def ivfTombstonesOpt(spark: SparkSession,
-                                          path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.parquet(p.toString).select("id").distinct())
-    else None
-  }
+    StoreKernel.appendTombstones(ids, idCol, path)
 
   /** MATERIALIZE IVF deletions — BUCKET-PRUNED: only the cells that
     * actually contain a tombstoned id are rewritten (one column-pruned
@@ -701,102 +678,82 @@ object Knn {
     * retrained: compaction reclaims bytes, it does not answer
     * distribution shift — that is [[EmbeddingStore.drift]]'s
     * metric and a full rebuild's job. Returns a manifest
-    * (component, rows). Run in a maintenance window (the partition
-    * swap is not atomic w.r.t. concurrent probes) — same contract as
-    * [[compactGraphStore]] / [[EmbeddingStore.compactStore]]. */
+    * (component, rows). The partition overwrite is an in-place
+    * rewrite under the [[StoreKernel]] contract. */
   def compactIvfStore(spark: SparkSession, path: String,
                       extraCells: Seq[Long] = Nil): DataFrame = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cellsPath = s"$path/cells"
-    val tombOpt = ivfTombstonesOpt(spark, path)
-      .map(_.localCheckpoint(true))
-    val nTomb = tombOpt.map(_.count()).getOrElse(0L)
-    val affected: Seq[Long] = tombOpt.map { tomb =>
-      spark.read.parquet(cellsPath).select("id", "cell")
-        .join(broadcast(tomb), Seq("id"), "left_semi")
-        .select(col("cell").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-    }.getOrElse(Nil)
-    // `extraCells` (round 15 — the files-per-cell maintenance
-    // trigger): cells rewritten for small-file COALESCING even if
-    // nothing in them is tombstoned. The rewrite below hashes each
-    // cell to one shuffle partition, so a coalesced cell lands as one
-    // file regardless of how many micro-batch appends accreted.
-    val rewriteSet = (affected ++ extraCells).distinct
-    val (rewritten, emptied) =
-      if (rewriteSet.isEmpty) (0L, 0L)
-      else {
-        // lineage OFF the overwrite path: the write below replaces
-        // the very partitions this frame reads
-        val scan = spark.read.parquet(cellsPath)
-          .where(col("cell").isin(rewriteSet: _*))
-        val survivors = tombOpt.fold(scan)(t =>
-            scan.join(broadcast(t), Seq("id"), "left_anti"))
-          .localCheckpoint(true)
-        val keptCells = survivors.select(col("cell").cast("long"))
-          .distinct().collect().map(_.getLong(0)).toSet
-        val key = "spark.sql.sources.partitionOverwriteMode"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, "dynamic")
-        try survivors.repartition(col("cell"))
-          .sortWithinPartitions("cell", "id")
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(cellsPath)
-        finally spark.conf.set(key, prev)
-        graft.plans.Blocks.free(survivors)
-        val gone = rewriteSet.filterNot(keptCells)
-        gone.foreach(c => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$cellsPath/cell=$c"), true))
-        (keptCells.size.toLong, gone.size.toLong)
-      }
-    tombOpt.foreach { t =>
-      graft.plans.Blocks.free(t)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    }
-    Seq(("tombstones_applied", nTomb), ("cells_rewritten", rewritten),
-      ("cells_emptied", emptied),
-      ("cells_coalesced", extraCells.distinct.filterNot(affected.toSet)
-        .size.toLong))
+    new IvfCompaction(spark, path).run(extraCells)._1
       .toDF("component", "rows")
   }
 
-  /** Per-partition FILE layout of a persisted store component — the
-    * small-file-accretion metric the streaming-ingest maintenance
-    * loops read ([[maintainIvfStore]]'s / [[maintainGraphStore]]'s
-    * files-per-cell trigger): every micro-batch append lands at least
-    * one file per touched partition directory, and nothing bounded
-    * the accretion until a compaction (r14 verdict "what's wrong"
-    * #4). Driver-side filesystem METADATA listing (one recursive ls —
-    * the same scale as the store's partition count, never its rows);
-    * ScalaTest-surface by design, like every FS-layout fact. Output:
-    * (partition, n_files, bytes) — `partition` is the directory path
-    * relative to the component root ("" for unpartitioned files). */
-  def storeFileStats(spark: SparkSession, path: String,
-                     component: String): DataFrame = {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(s"$path/$component")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // qualified root so relativize works against the (scheme-
-    // qualified) listing paths
-    val root = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(s"$path/$component"))
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def walk(p: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (!st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")) {
-          val rel = root.toUri.relativize(st.getPath.getParent.toUri)
-            .getPath.stripSuffix("/")
-          acc += ((rel, st.getLen))
+  /** One IVF compaction's inputs, each read once and shared by
+    * [[maintainIvfStore]]'s policy check and the rewrite itself: the
+    * distinct tombstone set as a driver-local frame (broadcast-scale
+    * by contract — counted without a job and broadcast by every pass),
+    * and per cell (n_rows, n_tombstoned) from one column-pruned
+    * (id, cell) pass over EVERY cell when tombstones exist (cell-count
+    * rows to the driver; empty otherwise). The stats pick the affected
+    * cells and tell which rewritten cells keep a survivor, so an
+    * emptied cell is known without a second pass over the survivors. */
+  private[operators] final class IvfCompaction(spark: SparkSession,
+                                               path: String) {
+    private val cellsPath = s"$path/cells"
+    private val tombRows = StoreKernel.tombstones(spark, path)
+      .map(t => (t.collectAsList(), t.schema))
+    val nTomb: Long = tombRows.fold(0L)(_._1.size.toLong)
+    private val tomb = tombRows.map { case (rows, schema) =>
+      spark.createDataFrame(rows, schema) }
+    // one listing of the cells component serves every pass (all run
+    // before the overwrite)
+    private lazy val cells = spark.read.parquet(cellsPath)
+    private def collectStats(scan: DataFrame): Map[Long, (Long, Long)] =
+      cellTombStats(scan, tomb).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val stats: Map[Long, (Long, Long)] =
+      if (tomb.isEmpty) Map.empty else collectStats(cells)
+
+    /** Rewrite the affected cells plus `extraCells` (round 15 — the
+      * files-per-cell maintenance trigger: cells rewritten for
+      * small-file COALESCING even if nothing in them is tombstoned; the
+      * rewrite hashes each cell to one shuffle partition, so a
+      * coalesced cell lands as one file regardless of how many
+      * micro-batch appends accreted) and drop the tombstones. Returns
+      * the manifest rows and, when tombstones were applied, the
+      * store's live row count after the rewrite. */
+    def run(extraCells: Seq[Long]): (Seq[(String, Long)], Option[Long]) = {
+      val affected = stats.collect { case (c, (_, t)) if t > 0 => c }.toSeq
+      val rewriteSet = (affected ++ extraCells).distinct
+      val (rewritten, emptied) =
+        if (rewriteSet.isEmpty) (0L, 0L)
+        else {
+          val known =
+            if (tomb.nonEmpty) stats
+            else collectStats(cells.where(col("cell").isin(rewriteSet: _*)))
+          // lineage OFF the overwrite path: the write below replaces
+          // the very partitions this frame reads
+          val scan = cells.where(col("cell").isin(rewriteSet: _*))
+          val survivors = tomb.fold(scan)(t =>
+              scan.join(broadcast(t), Seq("id"), "left_anti"))
+            .localCheckpoint(true)
+          StoreKernel.dynamicOverwrite(survivors.repartition(col("cell"))
+              .sortWithinPartitions("cell", "id"))
+            .partitionBy("cell").parquet(cellsPath)
+          graft.plans.Blocks.free(survivors)
+          val (kept, gone) = rewriteSet.partition(c =>
+            known.get(c).exists { case (n, t) => n > t })
+          gone.foreach(c =>
+            StoreKernel.dropComponent(spark, path, s"cells/cell=$c"))
+          (kept.size.toLong, gone.size.toLong)
         }
-      }
-    walk(root)
-    acc.toSeq.toDF("partition", "bytes")
-      .groupBy("partition")
-      .agg(count(lit(1)).as("n_files"), sum("bytes").as("bytes"))
+      if (tomb.nonEmpty)
+        StoreKernel.dropComponent(spark, path, StoreKernel.Tombstones)
+      (Seq(("tombstones_applied", nTomb), ("cells_rewritten", rewritten),
+        ("cells_emptied", emptied),
+        ("cells_coalesced", extraCells.distinct.filterNot(affected.toSet)
+          .size.toLong)),
+        tomb.map(_ => stats.values.map { case (n, t) => n - t }.sum))
+    }
   }
 
   /** Maintenance dashboard for a persisted IVF store (round 14 — the
@@ -807,10 +764,16 @@ object Knn {
     * n_rows → centroid retrain (full rebuild); n_tombstoned/n_rows
     * past a threshold → [[compactIvfStore]]. Works on every store the
     * family writes (flat, PQ, RQ, SQ8 — same layout). */
-  def ivfStoreStats(spark: SparkSession, path: String): DataFrame = {
-    val cells = spark.read.parquet(s"$path/cells")
-      .select(col("id"), col("cell").cast("long").as("cell"))
-    val tagged = ivfTombstonesOpt(spark, path).fold(
+  def ivfStoreStats(spark: SparkSession, path: String): DataFrame =
+    cellTombStats(spark.read.parquet(s"$path/cells"),
+      StoreKernel.tombstones(spark, path))
+
+  /** (cell, n_rows, n_tombstoned) of a cells scan against an optional
+    * distinct tombstone set. */
+  private def cellTombStats(scan: DataFrame,
+                            tomb: Option[DataFrame]): DataFrame = {
+    val cells = scan.select(col("id"), col("cell").cast("long").as("cell"))
+    val tagged = tomb.fold(
       cells.withColumn("__t", lit(0L)))(t =>
       cells.join(broadcast(t.withColumn("__t", lit(1L))), Seq("id"), "left")
         .withColumn("__t", coalesce(col("__t"), lit(0L))))
@@ -819,7 +782,8 @@ object Knn {
   }
 
   /** Threshold-driven store maintenance (round 14) — the policy loop
-    * over [[ivfStoreStats]] → [[compactIvfStore]]: compact when the
+    * over [[ivfStoreStats]]' per-cell facts → [[compactIvfStore]], one
+    * read of the tombstones and cells serving both: compact when the
     * tombstone backlog exceeds `maxTombstoneFrac` of stored rows,
     * otherwise do nothing (tombstones are cheap until they aren't —
     * they ride every probe as a broadcast anti-join, so the bound is
@@ -831,22 +795,31 @@ object Knn {
   def maintainIvfStore(spark: SparkSession, path: String,
                        maxTombstoneFrac: Double = 0.1,
                        maxFilesPerCell: Int = 0): Option[DataFrame] = {
+    import spark.implicits._
+    maintainIvfCells(spark, path, maxTombstoneFrac, maxFilesPerCell)
+      .map(_._1.toDF("component", "rows"))
+  }
+
+  /** [[maintainIvfStore]]'s work, returning [[IvfCompaction.run]]'s
+    * result when a compaction ran. */
+  private[operators] def maintainIvfCells(spark: SparkSession, path: String,
+                                          maxTombstoneFrac: Double = 0.1,
+                                          maxFilesPerCell: Int = 0)
+      : Option[(Seq[(String, Long)], Option[Long])] = {
     require(maxTombstoneFrac >= 0.0,
       s"need maxTombstoneFrac >= 0, got $maxTombstoneFrac")
-    val agg = ivfStoreStats(spark, path)
-      .agg(sum("n_rows").as("r"), sum("n_tombstoned").as("t")).head()
-    val rows = if (agg.isNullAt(0)) 0L else agg.getLong(0)
-    val tomb = if (agg.isNullAt(1)) 0L else agg.getLong(1)
+    val compaction = new IvfCompaction(spark, path)
+    // without tombstones the fraction is 0 and `rows` is never read
+    val rows = compaction.stats.values.map(_._1).sum
+    val tomb = compaction.stats.values.map(_._2).sum
     // Backlog is measured against the FULL distinct tombstone table,
     // not just tombstones present in cells (r14 advice): tombstones
     // matching no stored row (bad ids, double deletes of
     // already-compacted rows) still ride every probe as part of the
     // broadcast anti-join, so they count against the broadcast-scale
     // hygiene bound exactly like live ones — and compaction clears
-    // the whole table either way. tombTable >= tomb always, so this
-    // trigger subsumes the stats-based one.
-    val tombTable = ivfTombstonesOpt(spark, path)
-      .map(_.count()).getOrElse(0L)
+    // the whole table either way.
+    val tombTable = compaction.nTomb
     // Files-per-cell trigger (round 15, r14 verdict "what's wrong"
     // #4): [[ingestIvfStream]] lands ≥1 file per touched cell per
     // micro-batch; past the budget the over-accreted cells join the
@@ -855,7 +828,7 @@ object Knn {
     // by policy, not by operator restraint. 0 disables.
     val overCells: Seq[Long] =
       if (maxFilesPerCell <= 0) Nil
-      else storeFileStats(spark, path, "cells")
+      else StoreKernel.storeFileStats(spark, path, "cells")
         .where(col("n_files") > maxFilesPerCell &&
           col("partition").startsWith("cell="))
         .select(regexp_replace(col("partition"), "^cell=", "")
@@ -863,7 +836,7 @@ object Knn {
         .collect().map(_.getLong(0)).toSeq
     if ((rows > 0 && math.max(tomb, tombTable).toDouble / rows >
         maxTombstoneFrac) || overCells.nonEmpty)
-      Some(compactIvfStore(spark, path, overCells))
+      Some(compaction.run(overCells))
     else None
   }
 
@@ -907,16 +880,15 @@ object Knn {
 
   /** Shared IVF probe: nprobe nearest cells per query (per-row
     * bounded-heap centroid ranking), directory-pruned cell scan, optional
-    * attribute predicate + exclude anti-join BEFORE scoring — the
-    * store's own tombstones ([[deleteFromIvfIndex]]) merge into that
-    * same pre-scoring anti-join — 6-dp cosine per (query, candidate).
+    * attribute predicate + the store's tombstone anti-join
+    * ([[deleteFromIvfIndex]]) BEFORE scoring — 6-dp cosine per
+    * (query, candidate).
     * Returns the scored candidate stream; callers cap (top-k) or
     * threshold (range) it. */
   private def probeIvf(spark: SparkSession, path: String,
                        queries: DataFrame, queryId: String,
                        queryVec: String, nprobe: Int,
-                       pred: Option[Column],
-                       exclude: Option[DataFrame]): DataFrame = {
+                       pred: Option[Column]): DataFrame = {
     // Probe assignment as a PER-ROW bounded-heap expression (round 15,
     // guide §2.4 — the knnGraph round-11 swap, now on the store probe
     // path): the centroid frame is metadata-scale (c rows), so collect
@@ -933,8 +905,7 @@ object Knn {
     val cellsRaw = spark.read.parquet(s"$path/cells")
       .where(col("cell").isin(probedCells: _*)) // partition pruning
     val cellsPred = pred.fold(cellsRaw)(p => cellsRaw.where(p))
-    val excl = (exclude.map(_.select(col("id"))).toSeq ++
-      ivfTombstonesOpt(spark, path).toSeq).reduceOption(_ unionByName _)
+    val excl = StoreKernel.tombstones(spark, path)
     val cells = excl.fold(cellsPred)(t =>
       cellsPred.join(broadcast(t), Seq("id"), "left_anti"))
     cells.join(broadcast(qAssign), Seq("cell"))
@@ -1363,65 +1334,27 @@ object Knn {
     ids.map(id => java.lang.Math.floorMod(id, buckets.toLong).toInt)
       .toSeq.distinct.sorted
 
-  /** Run independent Spark actions from a small driver thread pool
-    * (guide §2.6: actions are only sequential because the driver
-    * calls them sequentially; overlapping lets a tiny write's commit
-    * latency hide under a big sibling job's tail). Strictly for
-    * MUTUALLY INDEPENDENT work — distinct output paths, no shared
-    * mutable state. NOT nestable: thunks must not call awaitAll
-    * themselves (current callers never do).
-    *
-    * Failure semantics (round 16, r15 advice): EVERY sibling is
-    * awaited before the first failure propagates, so no store write
-    * outlives the operator call — a thrown thunk must not leave a
-    * sibling overwrite racing a caller's retry/rebuild or committing
-    * after withStaticOverwrite restored the session's overwrite mode.
-    * Thunks run under scala.concurrent.blocking so the blocking Spark
-    * actions expand the global pool instead of starving it when
-    * operator calls overlap. */
-  private[operators] def awaitAll[T](work: Seq[() => T]): Seq[T] =
-    if (work.size <= 1) work.map(_())
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext, blocking}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fs = work.map(w => Future(blocking { w() }))
-      val results = fs.map(f =>
-        scala.util.Try(Await.result(f, Duration.Inf)))
-      results.map(_.get) // first Failure rethrows AFTER all have landed
-    }
+  /** The graph store's delete-log component (the id-keyed stores'
+    * [[StoreKernel.Tombstones]]). */
+  private val GraphDeletes = "deletes"
 
-  /** Existence-gated optional-component read. A MISSING directory is
-    * the common case for these probes (pre-r11 stores have no
-    * deletes table, most stores have no codes sidecar), and
-    * `Try(spark.read.parquet(...))` pays a thrown-and-logged
-    * AnalysisException per probe — per MICRO-BATCH on the streaming
-    * ingest path. One FileSystem.exists metadata call decides
-    * instead; a present-but-unreadable component still falls back to
-    * None exactly as the old Try did. */
-  private[operators] def parquetIfExists(spark: SparkSession,
-                                         path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) scala.util.Try(spark.read.parquet(path)).toOption
-    else None
-  }
-
-  private def graphFrames(spark: SparkSession, path: String,
-                          withCodes: Boolean = false): GraphFrames = {
-    val delDf = parquetIfExists(spark, s"$path/deletes")
+  /** Raw tombstoned graph ids; empty when the store predates them. */
+  private def graphDeletes(spark: SparkSession, path: String): DataFrame =
+    StoreKernel.parquetIfExists(spark, s"$path/$GraphDeletes")
       .map(_.select("id"))
       .getOrElse {
         import spark.implicits._
         Seq.empty[Long].toDF("id")
       }
+
+  private def graphFrames(spark: SparkSession, path: String,
+                          withCodes: Boolean = false): GraphFrames = {
+    val delDf = graphDeletes(spark, path)
     // tombstones collected once per operator call (broadcast-scale by
     // the delete contract): the set drives the walks' driver-side
     // candidate filtering AND replaces the round-15 emptiness probe
     // (same one job, full ids instead of a limit-1 scan)
-    val delIds: Set[Long] =
-      scala.util.Try(delDf.collect().map(_.getLong(0)).toSet)
-        .getOrElse(Set.empty)
+    val delIds: Set[Long] = delDf.collect().map(_.getLong(0)).toSet
     GraphFrames(
       spark.read.parquet(s"$path/edges"),
       spark.read.parquet(s"$path/nodes"),
@@ -1429,22 +1362,6 @@ object Knn {
       broadcast(delDf), delIds.nonEmpty,
       if (withCodes) Some(spark.read.parquet(s"$path/codes")) else None,
       delIds)
-  }
-
-  /** Pin partitionOverwriteMode to STATIC for the store-table
-    * overwrites (round-12 advice): under a session-level `dynamic`
-    * mode (which appendGraphIndex itself toggles and restores), an
-    * overwrite only replaces the partitions PRESENT in the frame — a
-    * (layer, bucket) partition whose rows were all tombstoned would
-    * keep its old files and resurrect deleted nodes after compaction,
-    * and a rebuild at an existing path would keep stale partitions.
-    * Static mode replaces the whole table, which is what "overwrite
-    * the store" means. */
-  private def withStaticOverwrite[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "static")
-    try f finally spark.conf.set(key, prev)
   }
 
   /** Build a PERSISTED kNN-graph (NSW / HNSW) index — the
@@ -1534,7 +1451,6 @@ object Knn {
       else math.min(layers,
         canon.agg(max(levelOf(col("id"), layers, portableHash)))
           .head().getInt(0))
-    withStaticOverwrite(spark) {
     // ONE unioned write per store table instead of one write per layer
     // (round 15, guide §2.6/§1.2): the per-layer kNN builds are
     // independent subtrees, so unioning them under a single write job
@@ -1542,28 +1458,31 @@ object Knn {
     // layer's build+write ran to completion before the next started,
     // leaving the tail of every layer's stages under-parallelized) and
     // collapses 2×(layers+1) write jobs to 2. Same rows, same
-    // (layer, bucket) directories — value-identical store.
+    // (layer, bucket) directories — value-identical store. The
+    // partitioned tables overwrite STATICALLY (whole table, whatever
+    // the session default): a rebuild at an existing path must not
+    // keep stale partitions.
     // The five independent table writes (meta, deletes, centroids,
     // nodes, edges — distinct paths, no read of each other) overlap
-    // from a driver pool ([[awaitAll]], guide §2.6) so the tiny
+    // from a driver pool ([[StoreKernel.awaitAll]]) so the tiny
     // writes' commit latency hides under the edge build; only the
     // entry table, which reads centroids and nodes back, waits.
-    awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => Seq((k, buckets, topEff, portableHash, alphaMicro, kCandEff))
         .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
         .write.mode("overwrite").parquet(s"$path/meta"),
       // empty tombstone table — the delete/compact lifecycle handle
       // (same convention as every other persisted store)
       () => Seq.empty[Long].toDF("id")
-        .write.mode("overwrite").parquet(s"$path/deletes"),
+        .write.mode("overwrite").parquet(s"$path/$GraphDeletes"),
       () => sampleCentroids(canon, "id", "vec", cEff, portableHash)
         .write.mode("overwrite").parquet(s"$path/centroids"),
-      () => canon.select(col("id") +:
+      () => StoreKernel.staticOverwrite(canon.select(col("id") +:
           transform(col("vec"), _.cast("double")).as("vec") +:
           keep.map(col): _*)
-        .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/nodes"),
-      () => (0 to topEff).map { l =>
+        .withColumn("bucket", pmod(col("id"), lit(buckets.toLong)).cast("int")))
+        .partitionBy("bucket").parquet(s"$path/nodes"),
+      () => StoreKernel.staticOverwrite((0 to topEff).map { l =>
           val sub =
             if (l == 0) canon
             else canon.where(levelOf(col("id"), topEff, portableHash) >= l)
@@ -1578,8 +1497,7 @@ object Knn {
             .withColumn("layer", lit(l))
             .withColumn("bucket",
               pmod(col("src"), lit(buckets.toLong)).cast("int"))
-        }.reduce(_ unionByName _)
-        .write.mode("overwrite")
+        }.reduce(_ unionByName _))
         .partitionBy("layer", "bucket").parquet(s"$path/edges")))
     val cents = spark.read.parquet(s"$path/centroids")
     val writtenNodes = spark.read.parquet(s"$path/nodes") // read-back once
@@ -1594,7 +1512,6 @@ object Knn {
           col("m.vec").as("nvec"))
     }.reduce(_ unionByName _)
     allEntries.write.mode("overwrite").parquet(s"$path/entries")
-    }
   }
 
   /** NSW INSERT maintenance for a persisted graph index (round-9
@@ -1678,7 +1595,7 @@ object Knn {
     // checkpointed so no later write invalidates its lineage.
     // The layers are MUTUALLY INDEPENDENT (every one beam-searches
     // the same PRE-append store), so they run from a driver pool
-    // ([[awaitAll]], guide §2.6) and overlap their many small jobs;
+    // ([[StoreKernel.awaitAll]]) and overlap their many small jobs;
     // kept sequential under countCandidates (the probe-budget
     // accumulator is not an atomic counter) — that flag is
     // instrumentation-only, never set in gate/bench paths.
@@ -1786,7 +1703,7 @@ object Knn {
     }
     val mergedPerLayer: Seq[DataFrame] =
       if (countCandidates) (0 to layers).flatMap(layerDelta)
-      else awaitAll((0 to layers).map(l => () => layerDelta(l))).flatten
+      else StoreKernel.awaitAll((0 to layers).map(l => () => layerDelta(l))).flatten
     // Phase 2 — WRITES, nodes FIRST (round-11 advice): an interrupted
     // append leaves unlinked nodes, never dangling edges.
     newNodes
@@ -1808,14 +1725,8 @@ object Knn {
         .write.mode("append").partitionBy("bucket").parquet(s"$path/codes")
     }
     if (mergedPerLayer.nonEmpty) {
-      val allMerged = mergedPerLayer.reduce(_ unionByName _)
-      val prevMode =
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try allMerged.write.mode("overwrite").partitionBy("layer", "bucket")
-        .parquet(s"$path/edges")
-      finally spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-        prevMode)
+      StoreKernel.dynamicOverwrite(mergedPerLayer.reduce(_ unionByName _))
+        .partitionBy("layer", "bucket").parquet(s"$path/edges")
       mergedPerLayer.foreach(graft.plans.Blocks.free)
     }
     val cents = spark.read.parquet(s"$path/centroids")
@@ -1847,12 +1758,11 @@ object Knn {
     * tombstoned contributes no seed until [[compactGraphStore]]
     * recomputes entries — the documented tombstone-vs-compacted
     * difference (soft deletes degrade seeding, never correctness).
-    * Tombstones must stay broadcast-scale between compactions, the
-    * same bound as every tombstone store. */
+    * Tombstone contract in [[StoreKernel]]. */
   def deleteFromGraphIndex(ids: DataFrame, idCol: String,
                            path: String): Unit =
-    ids.select(col(idCol).cast("long").as("id"))
-      .write.mode("append").parquet(s"$path/deletes")
+    StoreKernel.appendTombstones(
+      ids.select(col(idCol).cast("long").as("id")), "id", path, GraphDeletes)
 
   /** MATERIALIZE deletions: nodes and edges drop every tombstoned id
     * (an edge loses either endpoint → the edge goes; surviving
@@ -1863,20 +1773,16 @@ object Knn {
     * level (an emptied top layer must not strand descent seeds), and
     * the tombstone table resets. Only rewrites what a compaction must:
     * each table reads, checkpoints (lineage off the overwrite path),
-    * and lands once — under static partition-overwrite, so
-    * fully-tombstoned partitions' old files are replaced, not kept. */
+    * and lands once — the partitioned tables under a static overwrite
+    * ([[StoreKernel.staticOverwrite]]), so fully-tombstoned partitions'
+    * old files are replaced, not kept. */
   def compactGraphStore(spark: SparkSession, path: String): Unit = {
     import spark.implicits._
     val GraphMeta(k, buckets, layers, portable, alphaMicro, kCand) =
       readGraphMeta(spark, path)
     // pre-r11 stores have no deletes table — compacting one is a no-op
     // rewrite, not an error (same fallback the walk takes)
-    val del = broadcast(
-      parquetIfExists(spark, s"$path/deletes")
-        .map(_.select("id"))
-        .getOrElse {
-          Seq.empty[Long].toDF("id")
-        })
+    val del = broadcast(graphDeletes(spark, path))
     val nodes2 = spark.read.parquet(s"$path/nodes")
       .join(del, Seq("id"), "left_anti")
       .localCheckpoint(true)
@@ -1899,28 +1805,24 @@ object Knn {
         val row = nodes2.agg(max(levelOf(col("id"), layers, portable))).head()
         if (row.isNullAt(0)) 0 else math.min(layers, row.getInt(0))
       }
-    withStaticOverwrite(spark) {
     // repartition by the partition key → one file per directory:
     // compaction coalesces the per-append file accretion (round 15 —
     // [[maintainGraphStore]]'s files-per-bucket trigger relies on
     // this resetting the count)
-    nodes2.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/nodes")
+    StoreKernel.staticOverwrite(nodes2.repartition(col("bucket")))
+      .partitionBy("bucket").parquet(s"$path/nodes")
     // codes sidecar follows the survivors (round 13): re-project the
     // compacted node table through the stored books so the ADC walk's
     // staleness guard holds post-compaction.
     readGraphBooks(spark, path).foreach { books =>
-      nodes2.select(col("id"),
+      StoreKernel.staticOverwrite(nodes2.select(col("id"),
           pmod(col("id"), lit(buckets.toLong)).cast("int").as("bucket"),
           Pq.codesColumn(col("vec"), books).as("codes"))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/codes")
+        .repartition(col("bucket")))
+        .partitionBy("bucket").parquet(s"$path/codes")
     }
-    edges2.repartition(col("layer"), col("bucket"))
-      .write.mode("overwrite").partitionBy("layer", "bucket")
-      .parquet(s"$path/edges")
+    StoreKernel.staticOverwrite(edges2.repartition(col("layer"), col("bucket")))
+      .partitionBy("layer", "bucket").parquet(s"$path/edges")
     graft.plans.Blocks.free(edges2)
     val cents = spark.read.parquet(s"$path/centroids")
     val survivors = nodes2.select(col("id"), col("vec"))
@@ -1941,8 +1843,7 @@ object Knn {
       .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
       .write.mode("overwrite").parquet(s"$path/meta")
     Seq.empty[Long].toDF("id")
-      .write.mode("overwrite").parquet(s"$path/deletes")
-    }
+      .write.mode("overwrite").parquet(s"$path/$GraphDeletes")
   }
 
   /** Maintenance dashboard for a persisted GRAPH store (round 15, r14
@@ -1958,8 +1859,8 @@ object Knn {
     * [[maintainGraphStore]]'s loop). */
   def graphStoreStats(spark: SparkSession, path: String): DataFrame = {
     val GraphMeta(_, _, layers, portable, _, _) = readGraphMeta(spark, path)
-    val del = parquetIfExists(spark, s"$path/deletes")
-      .map(_.select("id").distinct().withColumn("__t", lit(1L)))
+    val del = StoreKernel.tombstones(spark, path, GraphDeletes)
+      .map(_.withColumn("__t", lit(1L)))
     val nodes = spark.read.parquet(s"$path/nodes").select("id", "bucket")
     val tagged = del.fold(nodes.withColumn("__t", lit(0L)))(d =>
       nodes.join(broadcast(d), Seq("id"), "left")
@@ -1999,11 +1900,10 @@ object Knn {
     require(maxTombstoneFrac >= 0.0,
       s"need maxTombstoneFrac >= 0, got $maxTombstoneFrac")
     val nodes = spark.read.parquet(s"$path/nodes").select("id").count()
-    val nDel = parquetIfExists(spark, s"$path/deletes")
-      .map(_.select("id").distinct().count())
-      .getOrElse(0L)
+    val nDel = StoreKernel.tombstones(spark, path, GraphDeletes)
+      .map(_.count()).getOrElse(0L)
     val filesOver = maxFilesPerBucket > 0 &&
-      !storeFileStats(spark, path, "nodes")
+      !StoreKernel.storeFileStats(spark, path, "nodes")
         .where(col("n_files") > maxFilesPerBucket).isEmpty
     if ((nodes > 0 && nDel.toDouble / nodes > maxTombstoneFrac) ||
         filesOver) {
@@ -2034,16 +1934,13 @@ object Knn {
                       books: Array[Array[Array[Double]]]): Unit = {
     import spark.implicits._
     val nodes = spark.read.parquet(s"$path/nodes")
-    withStaticOverwrite(spark) {
-      (for (s <- books.indices; c <- books(s).indices)
-        yield (s, c, books(s)(c).toSeq))
-        .toDF("s", "c", "cw")
-        .write.mode("overwrite").parquet(s"$path/codes_books")
-      nodes.select(col("id"), col("bucket"),
-        Pq.codesColumn(col("vec"), books).as("codes"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/codes")
-    }
+    (for (s <- books.indices; c <- books(s).indices)
+      yield (s, c, books(s)(c).toSeq))
+      .toDF("s", "c", "cw")
+      .write.mode("overwrite").parquet(s"$path/codes_books")
+    StoreKernel.staticOverwrite(nodes.select(col("id"), col("bucket"),
+        Pq.codesColumn(col("vec"), books).as("codes")))
+      .partitionBy("bucket").parquet(s"$path/codes")
   }
 
   /** The [[writeGraphCodes]] books, read back from the store — the
@@ -2054,10 +1951,8 @@ object Knn {
     * this first). */
   private def readGraphBooks(spark: SparkSession,
                              path: String): Option[Array[Array[Array[Double]]]] =
-    parquetIfExists(spark, s"$path/codes_books").flatMap(df =>
-    scala.util.Try {
-      val rows = df
-        .select("s", "c", "cw").collect()
+    StoreKernel.parquetIfExists(spark, s"$path/codes_books").map { df =>
+      val rows = df.select("s", "c", "cw").collect()
       val m = rows.map(_.getInt(0)).max + 1
       val k = rows.map(_.getInt(1)).max + 1
       val books = Array.ofDim[Array[Double]](m, k)
@@ -2065,7 +1960,7 @@ object Knn {
         books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
       }
       books
-    }.toOption)
+    }
 
   /** CODED beam walk over a persisted graph index + exact re-rank —
     * the DiskANN search recipe on the [[writeGraphCodes]] sidecar:

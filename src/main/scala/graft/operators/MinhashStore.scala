@@ -97,7 +97,7 @@ object MinhashStore {
     // coalesces to advisory-sized files, never to one). Both exchanges
     // carry keys-only rows AFTER the cache, so the widened compute
     // stage is untouched.
-    graft.operators.Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => signed.hint("rebalance").write.mode(mode).parquet(s"$path/sigs"),
       () => {
         banded.repartition(col("band"))
@@ -113,19 +113,10 @@ object MinhashStore {
     * stop reporting them immediately; their bytes are reclaimed at the
     * next [[compactStore]]. Deletion is append-only metadata — no store
     * rewrite happens here, so it is safe to call per-batch (GDPR-style
-    * takedowns, retraction feeds). The tombstone set must stay
-    * broadcast-scale between compactions (it rides into the probe as a
-    * broadcast anti-join); compaction zeroes it. */
+    * takedowns, retraction feeds). Tombstone contract in
+    * [[StoreKernel]]. */
   def delete(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
-
-  private def tombstonesOpt(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).select("id").distinct())
-    else None
-  }
+    StoreKernel.appendTombstones(ids, idCol, path)
 
   /** Threshold-driven store maintenance (round 15 —
     * [[graft.operators.Knn.maintainIvfStore]]'s fingerprint-store
@@ -144,9 +135,9 @@ object MinhashStore {
     require(maxTombstoneFrac >= 0.0,
       s"need maxTombstoneFrac >= 0, got $maxTombstoneFrac")
     val sigs = spark.read.parquet(s"$path/sigs").select("id").count()
-    val nTomb = tombstonesOpt(spark, path).map(_.count()).getOrElse(0L)
+    val nTomb = StoreKernel.tombstones(spark, path).map(_.count()).getOrElse(0L)
     val shardsOver = maxAppendShards > 0 &&
-      Knn.storeFileStats(spark, path, "bands")
+      StoreKernel.storeFileStats(spark, path, "bands")
         .agg(sum("n_files")).head().getLong(0) > maxAppendShards
     if ((sigs > 0 && nTomb.toDouble / sigs > maxTombstoneFrac) ||
         shardsOver)
@@ -155,9 +146,8 @@ object MinhashStore {
   }
 
   /** Rewrite the store minus tombstones and collapse the per-append
-    * `bucket_counts` shards into one exact recount. Run this in a
-    * maintenance window (the component swap is not atomic with respect
-    * to concurrent probes). Returns a manifest:
+    * `bucket_counts` shards into one exact recount (swap contract in
+    * [[StoreKernel]]). Returns a manifest:
     * (component, rows) for sigs/bands plus the applied tombstone count.
     *
     * Compaction restores the two properties appends and deletes erode:
@@ -165,9 +155,7 @@ object MinhashStore {
     * pre-compact cap is conservative — counts still include tombstoned
     * rows), and the counts scan stops paying one shard per append. */
   def compactStore(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tomb = tombstonesOpt(spark, path)
+    val tomb = StoreKernel.tombstones(spark, path)
     val nTomb = tomb.map(_.count()).getOrElse(0L)
     // no broadcast hint here: the probe-path anti-join broadcasts
     // because its candidate frame is batch-scale, but a compaction may
@@ -175,31 +163,24 @@ object MinhashStore {
     // broadcast vs shuffle from the actual size
     def minus(df: DataFrame): DataFrame = tomb.fold(df)(t =>
       df.join(t, df("id") === t("id"), "left_anti"))
-    val tmp = s"$path/_compact_tmp"
-    fs.delete(new Path(tmp), true)
-    minus(spark.read.parquet(s"$path/sigs")).write.parquet(s"$tmp/sigs")
-    // one shuffle partition per band → one file per band: compaction
-    // coalesces the per-append shard accretion ([[maintainStore]]'s
-    // maxAppendShards trigger relies on this resetting the count)
-    minus(spark.read.parquet(s"$path/bands"))
-      .repartition(col("band"))
-      .write.partitionBy("band").parquet(s"$tmp/bands")
-    // recount from the compacted bands already on disk — one shard,
-    // exact, tombstone-free
-    spark.read.parquet(s"$tmp/bands")
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .write.parquet(s"$tmp/bucket_counts")
-    Seq("sigs", "bands", "bucket_counts").foreach { c =>
-      fs.delete(new Path(s"$path/$c"), true)
-      fs.rename(new Path(s"$tmp/$c"), new Path(s"$path/$c"))
+    StoreKernel.swapComponents(spark, path,
+        Seq("sigs", "bands", "bucket_counts")) { tmp =>
+      minus(spark.read.parquet(s"$path/sigs")).write.parquet(s"$tmp/sigs")
+      // one shuffle partition per band → one file per band: compaction
+      // coalesces the per-append shard accretion ([[maintainStore]]'s
+      // maxAppendShards trigger relies on this resetting the count)
+      minus(spark.read.parquet(s"$path/bands"))
+        .repartition(col("band"))
+        .write.partitionBy("band").parquet(s"$tmp/bands")
+      // recount from the compacted bands already on disk — one shard,
+      // exact, tombstone-free
+      spark.read.parquet(s"$tmp/bands")
+        .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
+        .write.parquet(s"$tmp/bucket_counts")
     }
-    fs.delete(new Path(tmp), true)
-    fs.delete(new Path(s"$path/tombstones"), true)
-    import spark.implicits._
-    Seq(("sigs", spark.read.parquet(s"$path/sigs").count()),
-        ("bands", spark.read.parquet(s"$path/bands").count()),
-        ("tombstones_applied", nTomb))
-      .toDF("component", "rows")
+    StoreKernel.dropComponent(spark, path, StoreKernel.Tombstones)
+    StoreKernel.manifest(spark, path, Seq("sigs", "bands"),
+      Seq(("tombstones_applied", nTomb)))
   }
 
   /** Near-dup pairs between `batch` docs and store docs:
@@ -252,7 +233,7 @@ object MinhashStore {
     // Tombstoned docs drop out of the candidate set here (broadcast
     // anti-join over the small candidate frame) — deleted history can
     // never re-surface as a pair even before compaction reclaims it.
-    val cand = tombstonesOpt(spark, path).fold(candRaw)(t =>
+    val cand = StoreKernel.tombstones(spark, path).fold(candRaw)(t =>
       candRaw.join(broadcast(t), candRaw("id_store") === t("id"), "left_anti"))
     // ONE pass over the store's signatures: candidates broadcast in,
     // then the (small) matched set joins the batch signatures.

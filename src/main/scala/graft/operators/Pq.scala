@@ -481,7 +481,7 @@ object Pq {
     // phases (guide §2.6, the writeGraphIndex discipline) hide the
     // small artifacts' commit latency under the real work.
     var books: Array[Array[Array[Double]]] = null
-    Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => Knn.sampleCentroids(corpus, idCol, vecCol, c, portableHash)
         .write.mode("overwrite").parquet(s"$path/centroids"),
       () => books =
@@ -493,7 +493,7 @@ object Pq {
     // attribute columns ride inside the cell directories — the
     // filtered-search handle for the coded probe (q345's discipline on
     // the compressed family).
-    Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => books.zipWithIndex.flatMap { case (cws, s) =>
           cws.zipWithIndex.map { case (cw, code) => (s, code, cw.toSeq) }
         }.toSeq.toDF("sub", "code", "cw")
@@ -623,7 +623,7 @@ object Pq {
       .where(col("cell").isin(probed: _*))
     val codesRaw = pred.fold(cellsScan)(p => cellsScan.where(p))
       .select("id", "codes", "cell")
-    val codesScan = Knn.ivfTombstonesOpt(spark, path).fold(codesRaw)(t =>
+    val codesScan = StoreKernel.tombstones(spark, path).fold(codesRaw)(t =>
       codesRaw.join(broadcast(t), Seq("id"), "left_anti"))
     val scored = codesScan.join(q, Seq("cell"))
       .where(col("id") =!= col("query_id"))
@@ -705,13 +705,13 @@ object Pq {
     import spark.implicits._
     // two awaitAll phases — the writeIvfPqIndex overlap discipline
     var trained: (Array[Array[Array[Double]]], Array[Array[Array[Double]]]) = null
-    Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => Knn.sampleCentroids(corpus, idCol, vecCol, c, portableHash)
         .write.mode("overwrite").parquet(s"$path/centroids"),
       () => trained = trainResidualCodebooks(corpus, idCol, vecCol, m, k, dim)))
     val (b1, b2) = trained
     // Same sorted-by-id cell layout as writeIvfPqIndex (re-rank pruning).
-    Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => Seq(b1, b2).zipWithIndex.flatMap { case (books, level) =>
           books.zipWithIndex.flatMap { case (cws, s) =>
             cws.zipWithIndex.map { case (cw, code) => (level, s, code, cw.toSeq) }
@@ -797,12 +797,12 @@ object Pq {
     import spark.implicits._
     // two awaitAll phases — the writeIvfPqIndex overlap discipline
     var trained: (Array[Double], Array[Double]) = null
-    Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => Knn.sampleCentroids(corpus, idCol, vecCol, c, portableHash)
         .write.mode("overwrite").parquet(s"$path/centroids"),
       () => trained = sq8Train(corpus, vecCol, dim)))
     val (mins, maxs) = trained
-    Knn.awaitAll(Seq(
+    StoreKernel.awaitAll(Seq(
       () => mins.indices.map(d => (d, mins(d), maxs(d))).toDF("d", "mn", "mx")
         .write.mode("overwrite").parquet(s"$path/ranges"),
       () => Knn.assignCells(corpus, idCol, vecCol,

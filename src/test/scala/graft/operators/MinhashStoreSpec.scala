@@ -175,7 +175,7 @@ class MinhashStoreSpec extends SparkSpec {
     assert(mm("tombstones_applied") == 2L && mm("sigs") == 3L, s"$mm")
     // appends accrete band-table shards; the shard budget compacts
     // them back to one file per band
-    def bandFiles() = Knn.storeFileStats(spark, path, "bands")
+    def bandFiles() = StoreKernel.storeFileStats(spark, path, "bands")
       .agg(sum("n_files")).head().getLong(0)
     val n0 = bandFiles()
     MinhashStore.append(batch, "doc_id", "text", path)

@@ -1538,7 +1538,7 @@ class KnnSpec extends SparkSpec {
       .agg(sum("n_tombstoned")).head().getLong(0) == 0L,
       "compaction must clear the backlog")
     // appends accrete node files; the files budget coalesces them
-    def maxFiles() = Knn.storeFileStats(spark, dir, "nodes")
+    def maxFiles() = StoreKernel.storeFileStats(spark, dir, "nodes")
       .agg(max("n_files")).head().getLong(0)
     Knn.appendGraphIndex((100L to 103L).map(i => (i, point((i % 2).toInt)))
       .toDF("vec_id", "embedding"), "vec_id", "embedding", dir,
