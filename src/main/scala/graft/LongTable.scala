@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.operators.{KeyChecks, LongPivot}
-import graft.sources.Scan
 
 /** User-facing facade over the long-format FFIEC tables — the Spark
   * twin of the reference's DuckDB-lazy workflow
@@ -19,6 +19,12 @@ import graft.sources.Scan
   * Everything stays a lazy DataFrame until an action; item filters
   * reach the parquet scan as pushed predicates (item is a regular
   * column on the long layout — this is why the reference stores long).
+  *
+  * The layout is fixed by the writer ([[graft.pipeline.FfiecPipeline]]):
+  * (IDRSSD int, date date, item string, value of the dtype's type, see
+  * [[LongTable.dtypes]]). `scan` reads with that declared schema, so it
+  * launches no schema-inference or schema-merge job; a file whose
+  * column types do not match the long layout fails when it is read.
   */
 final case class LongTable(df: DataFrame,
                            idCols: Seq[String] = Seq("IDRSSD", "date")) {
@@ -55,9 +61,24 @@ final case class LongTable(df: DataFrame,
 }
 
 object LongTable {
-  /** Scan `{prefix}{dtype}_*.parquet` under `dataDir` with
-    * union-by-name schema evolution. */
+  /** The long tables, one per dtype name, with their value type (the
+    * reference's make_long_pq arrow types). */
+  val dtypes: Seq[(String, DataType)] = Seq(
+    "float" -> DoubleType, "int" -> IntegerType, "str" -> StringType,
+    "date" -> DateType, "bool" -> BooleanType)
+
+  /** The declared long layout of dtype `dtype`. */
+  private def schema(dtype: String): StructType = {
+    val value = dtypes.collectFirst { case (`dtype`, t) => t }
+    require(value.isDefined,
+      s"unknown long-table dtype: $dtype (one of ${dtypes.map(_._1).mkString(", ")})")
+    StructType(Seq(StructField("IDRSSD", IntegerType), StructField("date", DateType),
+      StructField("item", StringType), StructField("value", value.get)))
+  }
+
+  /** Scan `{prefix}{dtype}_*.parquet` under `dataDir` with the declared
+    * long layout of `dtype`. */
   def scan(spark: SparkSession, dataDir: String, dtype: String = "float",
            prefix: String = "ffiec_"): LongTable =
-    LongTable(Scan.unionByName(spark, s"$dataDir/$prefix${dtype}_*.parquet"))
+    LongTable(spark.read.schema(schema(dtype)).parquet(s"$dataDir/$prefix${dtype}_*.parquet"))
 }

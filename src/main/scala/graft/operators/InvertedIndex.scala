@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Overlap
+
 /** Persisted inverted index with bucket-pruned BM25 search — the
   * build-once/query-many form of [[TextAnalytics.bm25Scores]] (which
   * re-scans the corpus per query), the same shift writeIvfIndex makes
@@ -49,7 +51,7 @@ object InvertedIndex {
       .agg(count(lit(1)).as("tf"))
     val dfreq = postings.groupBy("term").agg(count(lit(1)).as("df"))
     // postings and _stats are independent writes — overlap (guide §2.6)
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => postings.join(dfreq, Seq("term"))
         .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets.toLong)))
         .repartition(col("bucket"))
@@ -83,7 +85,7 @@ object InvertedIndex {
     require(buckets >= 1, "buckets must be >= 1")
     import df.sparkSession.implicits._
     // trigram postings and _stats are independent writes — overlap
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => df.select(col(idCol).as("doc_id"),
           explode(array_distinct(charTrigrams(textCol))).as("tri"))
         .withColumn("bucket", pmod(xxhash64(col("tri")), lit(buckets.toLong)))
@@ -165,7 +167,7 @@ object InvertedIndex {
     // (round 16, guide §2.6: the same discipline write/writeTrigram
     // already apply; the tiny _stats commit hides under the postings
     // shuffle's tail)
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => df.select(col(idCol).as("doc_id"),
           posexplode(toks(textCol)).as(Seq("pos", "term")))
         .groupBy("doc_id", "term")

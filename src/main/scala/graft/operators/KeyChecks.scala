@@ -71,16 +71,30 @@ object KeyChecks {
       .where(col("n_na") > 0)
   }
 
-  /** True iff `cols` form a non-NULL primary key of `df`. */
-  def checkPkAndNonNull(df: DataFrame, cols: Seq[String]): Boolean =
-    nullCounts(df, cols).isEmpty && pkViolations(df, cols).isEmpty
+  /** True iff `cols` form a non-NULL primary key of `df`. Both verdicts
+    * come from one aggregation (one SQL execution, one row collected):
+    * key groups with more than one row, and key groups with a NULL key
+    * part — a NULL key part reaches every row of its group. */
+  def checkPkAndNonNull(df: DataFrame, cols: Seq[String]): Boolean = {
+    val verdict = df.groupBy(cols.map(col): _*)
+      .agg(count(lit(1)).as("n"))
+      .agg(
+        count(when(col("n") > 1, 1)).as("dups"),
+        count(when(cols.map(c => col(c).isNull).reduce(_ || _), 1)).as("nulls"))
+      .head()
+    verdict.getLong(0) == 0 && verdict.getLong(1) == 0
+  }
 
   /** Throw if duplicates exist on the key (the reference's hard gate
     * before writing long parquet). */
-  def assertNoDups(df: DataFrame, cols: Seq[String]): Unit = {
-    val n = pkViolations(df, cols).count()
+  def assertNoDups(df: DataFrame, cols: Seq[String]): Unit =
+    requireNoDups(pkViolations(df, cols).count(), cols)
+
+  /** The duplicate-key verdict for `n` duplicate key groups on `cols`,
+    * shared by [[assertNoDups]] and gates that count the groups on
+    * their own pass (FfiecPipeline's long write). */
+  def requireNoDups(n: Long, cols: Seq[String]): Unit =
     require(n == 0, s"Found $n duplicate key groups on {${cols.mkString(", ")}}")
-  }
 
   /** ANALYZE-style column profile in ONE corpus pass: for each listed
     * column — rows, nulls, exact distincts, min/max (rendered as

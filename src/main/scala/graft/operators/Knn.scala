@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
+import graft.plans.Overlap
 
 /** Approximate/exact nearest-neighbor search over an embedding column.
   *
@@ -1464,10 +1465,10 @@ object Knn {
     // keep stale partitions.
     // The five independent table writes (meta, deletes, centroids,
     // nodes, edges — distinct paths, no read of each other) overlap
-    // from a driver pool ([[StoreKernel.awaitAll]]) so the tiny
+    // from a driver pool ([[Overlap.awaitAll]]) so the tiny
     // writes' commit latency hides under the edge build; only the
     // entry table, which reads centroids and nodes back, waits.
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => Seq((k, buckets, topEff, portableHash, alphaMicro, kCandEff))
         .toDF("k", "buckets", "layers", "portable", "alphamicro", "kcand")
         .write.mode("overwrite").parquet(s"$path/meta"),
@@ -1595,7 +1596,7 @@ object Knn {
     // checkpointed so no later write invalidates its lineage.
     // The layers are MUTUALLY INDEPENDENT (every one beam-searches
     // the same PRE-append store), so they run from a driver pool
-    // ([[StoreKernel.awaitAll]]) and overlap their many small jobs;
+    // ([[Overlap.awaitAll]]) and overlap their many small jobs;
     // kept sequential under countCandidates (the probe-budget
     // accumulator is not an atomic counter) — that flag is
     // instrumentation-only, never set in gate/bench paths.
@@ -1703,7 +1704,7 @@ object Knn {
     }
     val mergedPerLayer: Seq[DataFrame] =
       if (countCandidates) (0 to layers).flatMap(layerDelta)
-      else StoreKernel.awaitAll((0 to layers).map(l => () => layerDelta(l))).flatten
+      else Overlap.awaitAll((0 to layers).map(l => () => layerDelta(l))).flatten
     // Phase 2 — WRITES, nodes FIRST (round-11 advice): an interrupted
     // append leaves unlinked nodes, never dangling edges.
     newNodes

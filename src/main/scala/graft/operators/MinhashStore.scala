@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Overlap
+
 /** Persisted MinHash fingerprint store — the dedup analog of the
   * persisted IVF index ([[Knn.writeIvfIndex]]): fingerprint the corpus
   * ONCE, keep signatures and banded LSH keys on disk, and near-dedup
@@ -97,7 +99,7 @@ object MinhashStore {
     // coalesces to advisory-sized files, never to one). Both exchanges
     // carry keys-only rows AFTER the cache, so the widened compute
     // stage is untouched.
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => signed.hint("rebalance").write.mode(mode).parquet(s"$path/sigs"),
       () => {
         banded.repartition(col("band"))

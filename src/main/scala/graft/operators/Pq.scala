@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Hashes, Vectors}
+import graft.plans.Overlap
 
 /** Product quantization for compressed-vector ANN: vectors split into
   * `m` subspaces, each encoded as the id of its nearest codeword —
@@ -481,7 +482,7 @@ object Pq {
     // phases (guide §2.6, the writeGraphIndex discipline) hide the
     // small artifacts' commit latency under the real work.
     var books: Array[Array[Array[Double]]] = null
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => Knn.sampleCentroids(corpus, idCol, vecCol, c, portableHash)
         .write.mode("overwrite").parquet(s"$path/centroids"),
       () => books =
@@ -493,7 +494,7 @@ object Pq {
     // attribute columns ride inside the cell directories — the
     // filtered-search handle for the coded probe (q345's discipline on
     // the compressed family).
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => books.zipWithIndex.flatMap { case (cws, s) =>
           cws.zipWithIndex.map { case (cw, code) => (s, code, cw.toSeq) }
         }.toSeq.toDF("sub", "code", "cw")
@@ -705,13 +706,13 @@ object Pq {
     import spark.implicits._
     // two awaitAll phases — the writeIvfPqIndex overlap discipline
     var trained: (Array[Array[Array[Double]]], Array[Array[Array[Double]]]) = null
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => Knn.sampleCentroids(corpus, idCol, vecCol, c, portableHash)
         .write.mode("overwrite").parquet(s"$path/centroids"),
       () => trained = trainResidualCodebooks(corpus, idCol, vecCol, m, k, dim)))
     val (b1, b2) = trained
     // Same sorted-by-id cell layout as writeIvfPqIndex (re-rank pruning).
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => Seq(b1, b2).zipWithIndex.flatMap { case (books, level) =>
           books.zipWithIndex.flatMap { case (cws, s) =>
             cws.zipWithIndex.map { case (cw, code) => (level, s, code, cw.toSeq) }
@@ -797,12 +798,12 @@ object Pq {
     import spark.implicits._
     // two awaitAll phases — the writeIvfPqIndex overlap discipline
     var trained: (Array[Double], Array[Double]) = null
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => Knn.sampleCentroids(corpus, idCol, vecCol, c, portableHash)
         .write.mode("overwrite").parquet(s"$path/centroids"),
       () => trained = sq8Train(corpus, vecCol, dim)))
     val (mins, maxs) = trained
-    StoreKernel.awaitAll(Seq(
+    Overlap.awaitAll(Seq(
       () => mins.indices.map(d => (d, mins(d), maxs(d))).toDF("d", "mn", "mx")
         .write.mode("overwrite").parquet(s"$path/ranges"),
       () => Knn.assignCells(corpus, idCol, vecCol,

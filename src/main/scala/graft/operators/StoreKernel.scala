@@ -159,30 +159,4 @@ object StoreKernel {
       .groupBy("partition")
       .agg(count(lit(1)).as("n_files"), sum("bytes").as("bytes"))
   }
-
-  /** Run independent Spark actions from a small driver thread pool
-    * (actions are only sequential because the driver calls them
-    * sequentially; overlapping lets a tiny write's commit latency hide
-    * under a big sibling job's tail). Strictly for
-    * MUTUALLY INDEPENDENT work — distinct output paths, no shared
-    * mutable state. NOT nestable: thunks must not call awaitAll
-    * themselves (current callers never do).
-    *
-    * Failure semantics: EVERY sibling is awaited before the first
-    * failure propagates, so no store write outlives the operator call —
-    * a thrown thunk must not leave a sibling overwrite racing a
-    * caller's retry or rebuild. Thunks run under
-    * scala.concurrent.blocking so the blocking Spark actions expand the
-    * global pool instead of starving it when operator calls overlap. */
-  private[operators] def awaitAll[T](work: Seq[() => T]): Seq[T] =
-    if (work.size <= 1) work.map(_())
-    else {
-      import scala.concurrent.{Await, Future, ExecutionContext, blocking}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val fs = work.map(w => Future(blocking { w() }))
-      val results = fs.map(f =>
-        scala.util.Try(Await.result(f, Duration.Inf)))
-      results.map(_.get) // first Failure rethrows AFTER all have landed
-    }
 }

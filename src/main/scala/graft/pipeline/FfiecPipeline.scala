@@ -2,12 +2,15 @@ package graft.pipeline
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.LongTable
 import graft.functions.Ffiec
 import graft.operators.{CombineParts, KeyChecks, LongPivot}
+import graft.plans.Overlap
 import graft.schema.FfiecSchema
 import graft.sources.ZipTsv
 
@@ -17,12 +20,20 @@ import graft.sources.ZipTsv
   * data type → item/schedule metadata → POR parquet → a manifest row
   * per written file.
   *
-  * Scale shape: each (schedule, date) group reads its members in
-  * parallel tasks, writes are independent, and the long-table pass is
-  * a per-schedule unpivot + union + distinct (one shuffle per dtype).
-  * Fleet-level parallelism comes from processing many zips at once —
-  * the reference's furrr::future_map_dfr becomes a plain loop of
-  * independent Spark jobs (or one job per zip on a cluster scheduler).
+  * Scale shape: a zip runs in two phases, each a set of independent
+  * writes overlapped through [[graft.plans.Overlap.awaitAll]] with at
+  * most `defaultParallelism` jobs in flight. Phase 1 writes the wide
+  * parquet of every (schedule, date) group — its members read in
+  * parallel tasks — and the POR files. Phase 2 writes the long table
+  * of every (date, dtype) — a per-schedule unpivot + union + distinct
+  * — and the item → schedules metadata. Each wide file is read back
+  * once, under the schema of the frame that wrote it, and that frame
+  * serves every dtype and the metadata: no schema-inference job. The
+  * duplicate-key gate rides the long write as an observed metric, not
+  * a separate job. Fleet-level parallelism comes from processing many
+  * zips at once — the reference's furrr::future_map_dfr becomes
+  * `concurrency` zips in flight (or one job per zip on a cluster
+  * scheduler).
   */
 object FfiecPipeline {
 
@@ -136,140 +147,186 @@ object FfiecPipeline {
     val resolved =
       if (schemaMap.nonEmpty) schemaMap else resolveSchemaMap(spark, zipPath)
     val members = ZipTsv.listMembers(spark, zipPath)
-    val written = Seq.newBuilder[Written]
+    val inFlight = spark.sparkContext.defaultParallelism
 
-    // ---- schedules: combine parts, write wide parquet per (schedule, date)
+    // ---- phase 1: wide parquet per (schedule, date), POR files. The
+    // multipart structure of every group is checked before any write.
     val schedGroups = members.filter(_.schedule.isDefined)
       .groupBy(m => (m.schedule.get.toLowerCase, m.dateRaw.getOrElse("unknown")))
       .toSeq.sortBy(_._1)
-    val widePaths = schedGroups.map { case ((schedule, dateRaw), ms) =>
-      val sorted = ms.sortBy(_.part.getOrElse(1))
-      val nParts = CombineParts.resolveNParts(
-        sorted.map(_.part), sorted.map(_.nParts), s"$schedule ($dateRaw)")
-      // Per-part diagnostics ride the write job via observed metrics —
-      // no second pass over the zip members (ref: ffiec_process.R:225
-      // ok/repairs recorded per written file).
-      val rawParts = ZipTsv.readSchedule(spark, zipPath, sorted.map(_.file),
-        resolved, overrides)
-      val observations = rawParts.indices.map(i =>
-        org.apache.spark.sql.Observation(s"diag_${schedule}_${dateRaw}_$i"))
-      val parts = rawParts.zip(observations).map { case (p, o) =>
-        p.observe(o,
-          sum(col("_problems")).as("problems"),
-          sum(when(array_contains(col("_repairs"), "newline-join"), 1L)
-            .otherwise(0L)).as("nl"),
-          sum(when(array_contains(col("_repairs"), "tab-repair"), 1L)
-            .otherwise(0L)).as("tab"))
-          .drop("_repairs", "_problems")
+      .map { case ((schedule, dateRaw), ms) =>
+        val sorted = ms.sortBy(_.part.getOrElse(1))
+        val nParts = CombineParts.resolveNParts(
+          sorted.map(_.part), sorted.map(_.nParts), s"$schedule ($dateRaw)")
+        (schedule, dateRaw, sorted, nParts)
       }
-      val combined = CombineParts.combine(parts, key = "IDRSSD")
-        .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
-      // pct_to_prop strictness (ref: ffeic_read.R:535 pct_to_prop stop()):
-      // in a pure column that is percent-encoded (any '%' present), a
-      // numeric cell WITHOUT '%' is a data-quality error in the
-      // reference. The two signals per column — has-% and bad-cell
-      // count — ride the write job as observed metrics over the
-      // pre-conversion strings; no second pass.
-      val pureStr = combined.schema.fields
-        .filter(f => f.dataType == StringType &&
-          resolved.get(f.name).contains("xbrli:pureItemType"))
-        .map(_.name).toSeq
-      val pureObs =
-        if (pureStr.isEmpty) None
-        else Some(org.apache.spark.sql.Observation(s"pure_${schedule}_$dateRaw"))
-      val observed = pureObs.fold(combined) { o =>
-        val aggs = pureStr.flatMap { c =>
-          Seq(max(col(c).contains("%").cast("long")).as(s"haspct_$c"),
-            sum((col(c).rlike("[0-9]") && !col(c).contains("%")).cast("long"))
-              .as(s"bad_$c"))
-        }
-        combined.observe(o, aggs.head, aggs.tail: _*)
-      }
-      val fixed = fixPurePercentCols(observed, resolved)
-      val out = s"$outDir/$prefix${schedule}_$dateRaw.parquet"
-      fixed.write.mode("overwrite").parquet(out)
-      val metrics = observations.map(_.get)
-      def metric(m: Map[String, Any], k: String): Long =
-        Option(m.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val badPure: Seq[String] = pureObs.toSeq.flatMap { o =>
-        val m = o.get
-        pureStr.filter(c => metric(m, s"haspct_$c") > 0 && metric(m, s"bad_$c") > 0)
-      }
-      if (strict && badPure.nonEmpty)
-        throw new IllegalStateException(
-          s"pct_to_prop: numeric values not ending in '%' in pure columns " +
-            s"${badPure.mkString(", ")} of $schedule ($dateRaw)")
-      val repairs =
-        (if (metrics.exists(metric(_, "nl") > 0)) Seq("newline-join") else Nil) ++
-        (if (metrics.exists(metric(_, "tab") > 0)) Seq("tab-repair") else Nil) ++
-        badPure.map(c => s"pure-pct-bad: $c")
-      val ok = metrics.map(metric(_, "problems")).sum == 0 && badPure.isEmpty
-      written += Written(schedule, "schedule", dateRaw, out, nParts,
-        ok = ok, repairs = repairs, innerFiles = sorted.map(_.file))
-      out
+    val porMembers = members.filterNot(_.schedule.isDefined)
+    val phase1 = Overlap.awaitAll(
+      schedGroups.map { case (schedule, dateRaw, sorted, nParts) => () =>
+        val (w, wide) = writeWide(spark, zipPath, outDir, prefix, resolved,
+          overrides, strict, schedule, dateRaw, sorted.map(_.file), nParts)
+        (w, Some(wide))
+      } ++ porMembers.map(m => () => (writePor(spark, zipPath, outDir, m), None)),
+      inFlight)
+    val wides = schedGroups.zip(phase1).map { case ((schedule, dateRaw, _, _), (_, wide)) =>
+      (schedule, dateRaw, wide.get)
     }
 
-    // ---- long parquet per arrow dtype (ref: make_long_pq)
-    val dtypes: Seq[(String, DataType)] = Seq(
-      "float" -> DoubleType, "int" -> IntegerType, "str" -> StringType,
-      "date" -> DateType, "bool" -> BooleanType)
-    val dateRaws = schedGroups.map(_._1._2).distinct
-    for (dateRaw <- dateRaws; (dname, dtype) <- dtypes) {
-      val longs = widePaths.filter(_.endsWith(s"_$dateRaw.parquet")).flatMap { p =>
-        val wide = spark.read.parquet(p)
-        val cols = LongPivot.colsOfType(wide, dtype, Seq("IDRSSD", "date"))
-        if (cols.isEmpty) None
-        else Some(LongPivot.long(wide, Seq("IDRSSD", "date"), dtype, distinct = false))
-      }
-      if (longs.nonEmpty) {
-        val all = longs.reduce(_.unionByName(_)).distinct()
-        KeyChecks.assertNoDups(all, Seq("IDRSSD", "date", "item"))
-        val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
-        all.write.mode("overwrite").parquet(out)
-        written += Written(dname, "long", dateRaw, out, 1, ok = true, Nil, Nil)
-      }
+    // ---- phase 2: long parquet per (date, dtype) (ref: make_long_pq)
+    // and item → schedules metadata (ref: make_schedule_pq), both from
+    // the phase-1 frames — no wide file is read for its schema again.
+    val idCols = Seq("IDRSSD", "date")
+    val dateRaws = wides.map(_._2).distinct
+    val longs = for {
+      dateRaw <- dateRaws
+      (dname, dtype) <- LongTable.dtypes
+      frames = wides.collect { case (_, `dateRaw`, w)
+        if LongPivot.colsOfType(w, dtype, idCols).nonEmpty => w }
+      if frames.nonEmpty
+    } yield { () =>
+      val out = s"$outDir/$prefix${dname}_$dateRaw.parquet"
+      writeLong(spark, frames, dtype, out)
+      Written(dname, "long", dateRaw, out, 1, ok = true, Nil, Nil)
     }
-
-    // ---- item → schedules metadata (ref: make_schedule_pq)
-    for (dateRaw <- dateRaws) {
-      val pairs = widePaths.filter(_.endsWith(s"_$dateRaw.parquet")).flatMap { p =>
-        val schedule = graft.sources.Scan.extractSchedule(
-          p.split('/').last, prefix)
-        spark.read.parquet(p).columns
-          .filterNot(c => c == "IDRSSD" || c == "date")
-          .map(item => (schedule, item))
-      }
-      if (pairs.nonEmpty) {
-        val out = s"$outDir/${prefix}schedules_$dateRaw.parquet"
-        LongPivot.itemSchedules(pairs.toDF("schedule", "item"))
-          .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
-          .write.mode("overwrite").parquet(out)
-        written += Written("schedules", "meta", dateRaw, out, 1, ok = true, Nil, Nil)
-      }
-    }
-
-    // ---- POR files (no schedule token in the member name). Repairs are
-    // recorded; ok stays true as in the reference (ffiec_process.R:442).
-    members.filterNot(_.schedule.isDefined).foreach { m =>
-      val dateRaw = m.dateRaw.getOrElse("unknown")
-      val out = s"$outDir/por_$dateRaw.parquet"
-      val obs = org.apache.spark.sql.Observation(s"diag_por_$dateRaw")
-      ZipTsv.readPor(spark, zipPath, m.file)
-        .observe(obs,
-          sum(when(array_contains(col("_repairs"), "tab-repair"), 1L)
-            .otherwise(0L)).as("tab"))
-        .drop("_repairs", "_problems")
+    val metas = for {
+      dateRaw <- dateRaws
+      pairs = wides.collect { case (schedule, `dateRaw`, w) =>
+        w.columns.toSeq.filterNot(idCols.contains).map((schedule, _))
+      }.flatten
+      if pairs.nonEmpty
+    } yield { () =>
+      val out = s"$outDir/${prefix}schedules_$dateRaw.parquet"
+      LongPivot.itemSchedules(pairs.toDF("schedule", "item"))
         .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
         .write.mode("overwrite").parquet(out)
-      val tab = Option(obs.get.getOrElse("tab", null))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      written += Written("por", "por", dateRaw, out, 1, ok = true,
-        repairs = if (tab > 0) Seq("tab-repair") else Nil,
-        innerFiles = Seq(m.file))
+      Written("schedules", "meta", dateRaw, out, 1, ok = true, Nil, Nil)
     }
+    val phase2 = Overlap.awaitAll(longs ++ metas, inFlight)
 
-    written.result().toDF()
+    val (wideRows, porRows) = phase1.map(_._1).splitAt(wides.size)
+    (wideRows ++ phase2 ++ porRows).toDF()
   }
+
+  /** Combine one (schedule, date)'s parts and write its wide parquet.
+    * Returns the manifest row and the written file read back under the
+    * schema of the frame that wrote it (no schema-inference job). */
+  private def writeWide(spark: SparkSession, zipPath: String, outDir: String,
+                        prefix: String, resolved: Map[String, String],
+                        overrides: Map[String, String], strict: Boolean,
+                        schedule: String, dateRaw: String, files: Seq[String],
+                        nParts: Int): (Written, DataFrame) = {
+    // Per-part diagnostics ride the write job via observed metrics —
+    // no second pass over the zip members (ref: ffiec_process.R:225
+    // ok/repairs recorded per written file).
+    val rawParts = ZipTsv.readSchedule(spark, zipPath, files, resolved, overrides)
+    val observations = rawParts.indices.map(i =>
+      Observation(s"diag_${schedule}_${dateRaw}_$i"))
+    val parts = rawParts.zip(observations).map { case (p, o) =>
+      p.observe(o,
+        sum(col("_problems")).as("problems"),
+        sum(when(array_contains(col("_repairs"), "newline-join"), 1L)
+          .otherwise(0L)).as("nl"),
+        sum(when(array_contains(col("_repairs"), "tab-repair"), 1L)
+          .otherwise(0L)).as("tab"))
+        .drop("_repairs", "_problems")
+    }
+    val combined = CombineParts.combine(parts, key = "IDRSSD")
+      .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
+    // pct_to_prop strictness (ref: ffeic_read.R:535 pct_to_prop stop()):
+    // in a pure column that is percent-encoded (any '%' present), a
+    // numeric cell WITHOUT '%' is a data-quality error in the
+    // reference. The two signals per column — has-% and bad-cell
+    // count — ride the write job as observed metrics over the
+    // pre-conversion strings; no second pass.
+    val pureStr = combined.schema.fields
+      .filter(f => f.dataType == StringType &&
+        resolved.get(f.name).contains("xbrli:pureItemType"))
+      .map(_.name).toSeq
+    val pureObs =
+      if (pureStr.isEmpty) None
+      else Some(Observation(s"pure_${schedule}_$dateRaw"))
+    val observed = pureObs.fold(combined) { o =>
+      val aggs = pureStr.flatMap { c =>
+        Seq(max(col(c).contains("%").cast("long")).as(s"haspct_$c"),
+          sum((col(c).rlike("[0-9]") && !col(c).contains("%")).cast("long"))
+            .as(s"bad_$c"))
+      }
+      combined.observe(o, aggs.head, aggs.tail: _*)
+    }
+    val fixed = fixPurePercentCols(observed, resolved)
+    val out = s"$outDir/$prefix${schedule}_$dateRaw.parquet"
+    fixed.write.mode("overwrite").parquet(out)
+    val metrics = observations.map(_.get)
+    val badPure: Seq[String] = pureObs.toSeq.flatMap { o =>
+      val m = o.get
+      pureStr.filter(c => metric(m, s"haspct_$c") > 0 && metric(m, s"bad_$c") > 0)
+    }
+    if (strict && badPure.nonEmpty)
+      throw new IllegalStateException(
+        s"pct_to_prop: numeric values not ending in '%' in pure columns " +
+          s"${badPure.mkString(", ")} of $schedule ($dateRaw)")
+    val repairs =
+      (if (metrics.exists(metric(_, "nl") > 0)) Seq("newline-join") else Nil) ++
+      (if (metrics.exists(metric(_, "tab") > 0)) Seq("tab-repair") else Nil) ++
+      badPure.map(c => s"pure-pct-bad: $c")
+    val ok = metrics.map(metric(_, "problems")).sum == 0 && badPure.isEmpty
+    val written = Written(schedule, "schedule", dateRaw, out, nParts,
+      ok = ok, repairs = repairs, innerFiles = files)
+    val schema = StructType(fixed.schema.fields.map(_.copy(nullable = true)))
+    (written, spark.read.schema(schema).parquet(out))
+  }
+
+  /** Write one long table: the union of the wide frames' unpivots of
+    * `dtype`, deduplicated. The duplicate-key gate (the reference's
+    * assert_no_dups before writing long parquet) rides the write job as
+    * an observed metric: a per-key row count over the distinct rows,
+    * where each duplicate group of k rows adds k · (1/k) = 1. A
+    * violation deletes the file just written and throws
+    * [[KeyChecks.requireNoDups]]'s IllegalArgumentException — the gate
+    * fails loudly and leaves no long table. */
+  private def writeLong(spark: SparkSession, wides: Seq[DataFrame],
+                        dtype: DataType, out: String): Unit = {
+    val key = Seq("IDRSSD", "date", "item")
+    val gate = Observation()
+    wides.map(LongPivot.long(_, Seq("IDRSSD", "date"), dtype, distinct = false))
+      .reduce(_.unionByName(_))
+      .distinct()
+      .withColumn("_n", count(lit(1)).over(Window.partitionBy(key.map(col): _*)))
+      .observe(gate, sum(when(col("_n") > 1, lit(1.0) / col("_n"))).as("dup_groups"))
+      .drop("_n")
+      .write.mode("overwrite").parquet(out)
+    val dups = Option(gate.get.getOrElse("dup_groups", null))
+      .map(v => math.round(v.asInstanceOf[Double])).getOrElse(0L)
+    if (dups > 0) {
+      val path = new Path(out)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+      KeyChecks.requireNoDups(dups, key)
+    }
+  }
+
+  /** Write one POR file (no schedule token in the member name). Repairs
+    * are recorded; ok stays true as in the reference
+    * (ffiec_process.R:442). */
+  private def writePor(spark: SparkSession, zipPath: String, outDir: String,
+                       m: ZipTsv.Member): Written = {
+    val dateRaw = m.dateRaw.getOrElse("unknown")
+    val out = s"$outDir/por_$dateRaw.parquet"
+    val obs = Observation(s"diag_por_$dateRaw")
+    ZipTsv.readPor(spark, zipPath, m.file)
+      .observe(obs,
+        sum(when(array_contains(col("_repairs"), "tab-repair"), 1L)
+          .otherwise(0L)).as("tab"))
+      .drop("_repairs", "_problems")
+      .withColumn("date", to_date(lit(dateRaw), "yyyyMMdd"))
+      .write.mode("overwrite").parquet(out)
+    Written("por", "por", dateRaw, out, 1, ok = true,
+      repairs = if (metric(obs.get, "tab") > 0) Seq("tab-repair") else Nil,
+      innerFiles = Seq(m.file))
+  }
+
+  /** An observed count, 0 when the observation saw no rows. */
+  private def metric(m: Map[String, Any], k: String): Long =
+    Option(m.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L)
 
   /** pureItemType columns arrive as strings, possibly percent-encoded —
     * convert to numeric proportions (ref: ffeic_read.R:585
@@ -293,21 +350,12 @@ object FfiecPipeline {
   /** Run `one` over every zip, `concurrency` at a time — the
     * Spark-native analogue of the reference's future/furrr multisession
     * (concurrent driver threads submit independent Spark jobs that
-    * share the executor pool; the scheduler interleaves stages). */
+    * share the executor pool; the scheduler interleaves stages). Fails
+    * like [[Overlap.awaitAll]]: after a failed zip no queued zip starts,
+    * and the running ones finish before the failure is rethrown. */
   private def mapZips[A](zips: Seq[(String, String)], concurrency: Int)
                         (one: (String, String) => A): Seq[A] =
-    if (concurrency <= 1) zips.map { case (zip, d) => one(zip, d) }
-    else {
-      import java.util.concurrent.Executors
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = Executors.newFixedThreadPool(concurrency)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(
-        Future.traverse(zips) { case (zip, d) => Future(one(zip, d)) },
-        Duration.Inf)
-      finally pool.shutdown()
-    }
+    Overlap.awaitAll(zips.map { case (zip, d) => () => one(zip, d) }, concurrency)
 
   /** Process every bulk zip in a directory (the reference's
     * ffiec_process); returns the concatenated manifest. When
@@ -349,7 +397,9 @@ object FfiecPipeline {
     val manifests = mapZips(zips, concurrency)(one) ++
       (if (itemRows.nonEmpty) Seq(itemRows.toDF()) else Nil)
     val out = manifests.reduce(_.unionByName(_))
-    out.write.mode("overwrite")
+    // a handful of rows from driver-local frames: one file, not one per
+    // unioned partition
+    out.coalesce(1).write.mode("overwrite")
       .parquet(s"$outDir/ffiec_process_data.parquet")
     out
   }

@@ -41,6 +41,15 @@ class LongTableSpec extends SparkSpec {
     val auto = t.pivot().orderBy("date", "IDRSSD").collect()
     assert(auto.length == 3)
     intercept[IllegalArgumentException](t.pivot(maxItems = 1))
+
+    // the scan declares the long layout: an unknown dtype is refused, and
+    // a file whose value type differs from its dtype fails when read
+    intercept[IllegalArgumentException](LongTable.scan(spark, dir.getAbsolutePath, "decimal"))
+    Seq((37, java.sql.Date.valueOf("2024-03-31"), "RCON9999", "x"))
+      .toDF("IDRSSD", "date", "item", "value")
+      .write.parquet(s"$dir/ffiec_int_20240331.parquet")
+    intercept[org.apache.spark.SparkException](
+      LongTable.scan(spark, dir.getAbsolutePath, "int").df.collect())
   }
 
   test("multimodal resize + audio windows stubs keep shape") {

@@ -71,6 +71,15 @@ class KeyChecksSpec extends SparkSpec {
     assert(nulls.length == 1 && nulls(0).getString(0) == "v" && nulls(0).getLong(1) == 1)
     assert(!KeyChecks.checkPkAndNonNull(df, Seq("k")))
     assert(KeyChecks.checkPkAndNonNull(df.where(col("k") === 2), Seq("k")))
+    // a NULL key part fails the gate on its own, and alongside a duplicate
+    assert(!KeyChecks.checkPkAndNonNull(df.where(col("k") === 2), Seq("k", "v")))
+    val both = Seq((Some(1), "a"), (Some(1), "b"), (None, "c")).toDF("k", "v")
+    assert(!KeyChecks.checkPkAndNonNull(both, Seq("k")))
+    assert(!KeyChecks.checkPkAndNonNull(both.where(col("k").isNull), Seq("k")))
+    assert(!KeyChecks.checkPkAndNonNull(both, Seq("k", "v")))
+    assert(KeyChecks.checkPkAndNonNull(both.where(col("k").isNotNull), Seq("k", "v")))
+    // an empty frame has no violation
+    assert(KeyChecks.checkPkAndNonNull(both.where(lit(false)), Seq("k", "v")))
     intercept[IllegalArgumentException] {
       KeyChecks.assertNoDups(df, Seq("k"))
     }

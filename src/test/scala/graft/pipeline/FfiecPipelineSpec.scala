@@ -50,10 +50,9 @@ class FfiecPipelineSpec extends SparkSpec {
     }
   }
 
-  test("processZip: multipart combine, typed long tables, metadata, POR") {
-    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw").toFile
-    val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq").toFile
-
+  /** One bulk zip: RC in two parts (float and pure-% items), RI (an
+    * int item with a CONF cell), a POR file and a Readme. */
+  private def writeFixtureZip(dir: File): String =
     writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312024.zip",
       "FFIEC CDR Call Schedule RC 03312024(1 of 2).txt" ->
         ("IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t100.5\t\n38\t200.0\t\n"),
@@ -66,6 +65,12 @@ class FfiecPipelineSpec extends SparkSpec {
          "37\tFirst Bank\t0\t2024-04-15T10:00:00\n" +
          "38\tSecond Bank\t1234\t2024-04-15T11:30:00\n"),
       "Readme.txt" -> "ignore")
+
+  test("processZip: multipart combine, typed long tables, metadata, POR") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_raw").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_pq").toFile
+
+    writeFixtureZip(dir)
 
     val manifest = FfiecPipeline.processZip(spark, s"$dir/FFIEC CDR Call Bulk All Schedules 03312024.zip",
       outDir.getAbsolutePath, schemaMap)
@@ -431,5 +436,155 @@ class FfiecPipelineSpec extends SparkSpec {
         s"$dir/FFIEC CDR Call Bulk All Schedules 06302024.zip",
         outDir.getAbsolutePath, schemaMap)
     }
+  }
+
+  test("processZip duplicate-key gate rides the long write") {
+    def zipWith(tag: String, riCash: String): (File, String) = {
+      val dir = java.nio.file.Files.createTempDirectory(s"ffiec_dup_$tag").toFile
+      val outDir = java.nio.file.Files.createTempDirectory(s"ffiec_dup_out_$tag").toFile
+      // RC and RI both carry the float item RCFD0010 for bank 37
+      val zip = writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312024.zip",
+        "FFIEC CDR Call Schedule RC 03312024.txt" ->
+          "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.5\t\n38\t2.0\t\n",
+        "FFIEC CDR Call Schedule RI 03312024.txt" ->
+          s"IDRSSD\tRCFD0010\tRIAD4340\t\nID\tCash\tNet income\t\n37\t$riCash\t42\t\n")
+      (outDir, zip)
+    }
+    // conflicting values: loud failure, and no long table left behind
+    val (badOut, badZip) = zipWith("conflict", "9.5")
+    val e = intercept[IllegalArgumentException] {
+      FfiecPipeline.processZip(spark, badZip, badOut.getAbsolutePath, schemaMap)
+    }
+    assert(e.getMessage.contains(
+      "Found 1 duplicate key groups on {IDRSSD, date, item}"), e.getMessage)
+    assert(!new File(badOut, "ffiec_float_20240331.parquet").exists())
+
+    // equal values: one row per key
+    val (okOut, okZip) = zipWith("equal", "1.5")
+    FfiecPipeline.processZip(spark, okZip, okOut.getAbsolutePath, schemaMap)
+    val longF = spark.read.parquet(s"$okOut/ffiec_float_20240331.parquet")
+    assert(longF.where(col("IDRSSD") === 37).count() == 1)
+    assert(longF.count() == 2)
+  }
+
+  test("processZip writes an empty long table for an all-blank dtype") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_blank").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_blank_out").toFile
+    // RIAD4340 is an int item with every cell blank
+    val zip = writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312024.zip",
+      "FFIEC CDR Call Schedule RI 03312024.txt" ->
+        "IDRSSD\tRCFD0010\tRIAD4340\t\nID\tCash\tNet income\t\n37\t1.5\t\t\n38\t2.5\t\t\n")
+    // a lost observation would block forever: bound the wait
+    val run = Future(FfiecPipeline.processZip(spark, zip, outDir.getAbsolutePath,
+      schemaMap).collect())(ExecutionContext.global)
+    val manifest = Await.result(run, 3.minutes)
+    assert(manifest.exists(_.getAs[String]("kind") == "int"))
+    val longI = spark.read.parquet(s"$outDir/ffiec_int_20240331.parquet")
+    assert(longI.columns.toSeq == Seq("IDRSSD", "date", "item", "value"))
+    assert(longI.count() == 0)
+    assert(spark.read.parquet(s"$outDir/ffiec_float_20240331.parquet").count() == 2)
+  }
+
+  /** The Spark jobs `body` launches: (call site, SQL execution id). A
+    * job inside an SQL execution takes the execution's call site (its
+    * stages may be submitted from another thread). */
+  private def jobsOf(body: => Unit): Seq[(String, Option[String])] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    org.apache.spark.grafttest.ListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String])]()
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.stageInfos.map(_.details).mkString("\n"),
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sqlSites.put(s.executionId.toString, s.details)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.grafttest.ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq.map { case (site, id) =>
+      (id.flatMap(i => Option(sqlSites.get(i))).getOrElse(site), id)
+    }
+  }
+
+  test("processZip, LongTable and checkKeys launch only the jobs they need") {
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_jobs").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_jobs_out").toFile
+    val zip = writeFixtureZip(dir)
+    val ingest = jobsOf {
+      FfiecPipeline.processZip(spark, zip, outDir.getAbsolutePath, schemaMap)
+    }
+    assert(ingest.nonEmpty)
+    // the duplicate-key gate is no separate job
+    assert(!ingest.exists(_._1.contains("KeyChecks")))
+    // outside SQL executions: the member listing, and at most one
+    // schema-inference job per wide file (rc, ri)
+    val nonSql = ingest.filter(_._2.isEmpty)
+    val schemaJobs = nonSql.filterNot(_._1.contains("ZipTsv$.listMembers"))
+    assert(schemaJobs.size <= 2, s"${schemaJobs.size} schema jobs")
+
+    val query = jobsOf {
+      graft.LongTable.scan(spark, outDir.getAbsolutePath, "float")
+        .forItems(Seq("RCFD0010", "RCON3838")).pivot(Seq("RCFD0010", "RCON3838"))
+        .collect()
+    }
+    assert(query.nonEmpty && query.forall(_._2.isDefined),
+      s"${query.count(_._2.isEmpty)} jobs outside an SQL execution")
+
+    var ok = false
+    val keys = jobsOf {
+      ok = graft.LongTable.scan(spark, outDir.getAbsolutePath, "float").checkKeys()
+    }
+    assert(ok)
+    assert(keys.nonEmpty && keys.forall(_._2.isDefined))
+    assert(keys.map(_._2).distinct.size == 1, s"${keys.map(_._2).distinct}")
+  }
+
+  test("fail-fast processAll leaves no Spark job running after it throws") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("ffiec_failfast").toFile
+    val outDir = java.nio.file.Files.createTempDirectory("ffiec_failfast_out").toFile
+    // the broken zip sorts first, four healthy zips follow
+    writeZip(dir, "FFIEC CDR Call Bulk All Schedules 03312023.zip",
+      "FFIEC CDR Call Schedule RC 03312023(1 of 3).txt" ->
+        "IDRSSD\tRCFD0010\t\nID\tCash\t\n37\t1.0\t\n")
+    for (d <- Seq("06302023", "09302023", "12312023", "03312024"))
+      writeZip(dir, s"FFIEC CDR Call Bulk All Schedules $d.zip",
+        s"FFIEC CDR Call Schedule RC $d.txt" ->
+          "IDRSSD\tRCFD0010\tRCFD0020\t\nID\tCash\tDue\t\n37\t1.5\t2.5\t\n",
+        s"FFIEC CDR Call Schedule RI $d.txt" ->
+          "IDRSSD\tRIAD4340\t\nID\tNet income\t\n37\t42\t\n")
+    val sc = spark.sparkContext
+    val lastStart = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        lastStart.accumulateAndGet(e.time, math.max)
+    }
+    sc.addSparkListener(listener)
+    try {
+      intercept[IllegalArgumentException] {
+        FfiecPipeline.processAll(spark, dir.getAbsolutePath,
+          outDir.getAbsolutePath, schemaMap, concurrency = 2)
+      }
+      val thrownAt = System.currentTimeMillis()
+      org.apache.spark.grafttest.ListenerBus.drain(sc)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty,
+        s"jobs still active: ${sc.statusTracker.getActiveJobIds.toSeq}")
+      // and no queued zip starts afterwards
+      Thread.sleep(500)
+      org.apache.spark.grafttest.ListenerBus.drain(sc)
+      assert(lastStart.get <= thrownAt, "a job started after processAll threw")
+    } finally sc.removeSparkListener(listener)
   }
 }
